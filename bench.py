@@ -51,47 +51,41 @@ def task_time_reader(spark):
     cores is direct evidence the plan parallelizes.
 
     Returns a ``snap()`` closure: each call returns the summed
-    ``executorRunTime`` (seconds) of all stages newly completed since
-    the previous call, read from the driver's AppStatusStore (the
-    always-on listener-bus store that backs the UI — no extra
-    listener, no UI needed).  The store's stage list is walked
-    newest-first and the walk stops at the last-seen stage id, so a
-    snapshot costs a handful of py4j calls, not a scan of the
-    retained-stage window; stage eviction (spark.ui.retainedStages)
-    only ever removes OLD stages, which are already counted.
+    ``executorRunTime`` (seconds) of all stage attempts that reached
+    COMPLETE or FAILED since the previous call, read from the driver's
+    AppStatusStore (the always-on listener-bus store that backs the
+    UI — no extra listener, no UI needed).  Counted attempts are
+    remembered by (stage id, attempt id) rather than by a stage-id
+    watermark: the store's list order is not guaranteed, and a stage
+    that is still ACTIVE at one snapshot is counted once, whole, at
+    the first snapshot that sees it finished.  Stage eviction
+    (spark.ui.retainedStages) only ever removes OLD stages, which are
+    already counted.
     Measurement-only instrumentation: no effect on plans or results.
     """
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     gw = sc._gateway
     empty_quantiles = gw.new_array(gw.jvm.double, 0)
-    state = {"max_id": -1}
+    stage_status = gw.jvm.org.apache.spark.status.api.v1.StageStatus
+    finished = gw.jvm.java.util.ArrayList()
+    finished.add(stage_status.COMPLETE)
+    finished.add(stage_status.FAILED)
+    seen: set[tuple[int, int]] = set()
 
     def snap() -> float:
         # flush the async listener bus so the last action's stage
         # metrics are final before reading
         jsc.listenerBus().waitUntilEmpty()
         stages = jsc.statusStore().stageList(
-            None, False, False, empty_quantiles, None)
-        n = stages.size()
-        if n == 0:
-            return 0.0
-        # direction-aware: the KV-store view has been observed
-        # newest-first, but don't bet correctness on it
-        newest_first = (n < 2
-                        or stages.apply(0).stageId()
-                        >= stages.apply(n - 1).stageId())
-        order = range(n) if newest_first else range(n - 1, -1, -1)
+            finished, False, False, empty_quantiles, None)
         total_ms = 0
-        top = state["max_id"]
-        for i in order:
+        for i in range(stages.size()):
             s = stages.apply(i)
-            sid = s.stageId()
-            if sid <= state["max_id"]:
-                break
-            top = max(top, sid)
-            total_ms += s.executorRunTime()
-        state["max_id"] = top
+            key = (s.stageId(), s.attemptId())
+            if key not in seen:
+                seen.add(key)
+                total_ms += s.executorRunTime()
         return total_ms / 1000.0
 
     return snap

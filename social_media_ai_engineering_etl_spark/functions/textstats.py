@@ -53,12 +53,6 @@ def emoji_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(EMOJI_CLASS))
 
 
-def emoji_frequency(text: Column) -> Column:
-    """emoji_count / len(text); 0.0 for empty (2-label.py:68)."""
-    n = F.length(text)
-    return F.when(n > 0, emoji_count(text) / n).otherwise(F.lit(0.0))
-
-
 def bin_label(frequency: Column,
               bins: tuple[tuple[float, str], ...] = EMOJI_BINS) -> Column:
     """First-threshold-wins binning (2-label.py:47-54): return the

@@ -539,74 +539,3 @@ def mixture_temperature(df: DataFrame, domain_col: str,
                     "n_keep",
                     F.coalesce("n_kept", F.lit(0)).cast("long")
                     .alias("n_kept")))
-
-
-def length_bucket_batches(df: DataFrame, id_col: str,
-                          token_count_col: Column, batch_size: int = 8,
-                          bucket_step: int = 16) -> DataFrame:
-    """Length-grouped batch planning (the dataloader-side complement
-    of sequence packing): documents bucket by rounded-up token count,
-    order deterministically by hash inside each bucket, and chop into
-    fixed-size batches.  Per-batch padding waste is the padded volume
-    (batch rows x batch max length) minus real tokens — the number a
-    random-order loader pays ~the corpus length variance for, and
-    length-grouping shrinks toward zero.
-
-    Shape: one shuffle on the bucket key, a rank window, integer
-    arithmetic throughout (oracle-exact).  At 100 TB the buckets are
-    the parallel unit; batch ids are deterministic (bucket, rank DIV
-    batch_size), so re-runs produce identical batch membership."""
-    from pyspark.sql import Window
-    n = token_count_col.cast("long")
-    bucket = (F.ceil(n / F.lit(bucket_step)) * bucket_step).cast("long")
-    d = df.select(F.col(id_col).alias("doc_id"), n.alias("n_tokens"),
-                  bucket.alias("bucket"))
-    w = Window.partitionBy("bucket").orderBy(
-        F.xxhash64(F.col("doc_id")), F.col("doc_id"))
-    d = d.withColumn("batch_idx",
-                     ((F.row_number().over(w) - 1) / batch_size)
-                     .cast("long"))
-    return (d.groupBy("bucket", "batch_idx")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("n_tokens").alias("real_tokens"),
-                 F.max("n_tokens").alias("max_tokens"))
-            .withColumn("padded_tokens",
-                        F.col("n_docs") * F.col("max_tokens"))
-            .withColumn("padding_waste",
-                        F.col("padded_tokens") - F.col("real_tokens")))
-
-
-def normalize_unicode(df: DataFrame, text_col: str,
-                      form: str = "NFC") -> DataFrame:
-    """Unicode normalization of a text column (NFC by default; NFKC
-    for compatibility folding) — the canonicalization step that runs
-    BEFORE any hash-based dedup, or visually identical strings
-    (e.g. ``é`` precomposed vs ``e`` + combining accent) land in
-    different shingle/minhash buckets and duplicates survive.
-
-    Spark has no native normalizer, so this is an Arrow-batched
-    ``mapInPandas`` over ``unicodedata.normalize`` — a narrow map, no
-    shuffle, linear in corpus bytes (the sanctioned Python-UDF case:
-    no builtin exists).  Cross-engine parity with DuckDB's
-    ``nfc_normalize`` is pinned in tests on planted decomposed
-    fixtures.  Adds ``<text_col>`` normalized in place plus
-    ``was_denormalized`` marking rows the pass changed."""
-    import unicodedata
-
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        raise ValueError(f"unknown normalization form: {form}")
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    schema = f"{fields}, was_denormalized boolean"
-
-    def run(batches):
-        for pdf in batches:
-            orig = pdf[text_col].astype("string")
-            norm = orig.map(lambda s: unicodedata.normalize(form, s)
-                            if isinstance(s, str) else s)
-            pdf = pdf.copy()
-            pdf[text_col] = norm
-            pdf["was_denormalized"] = (orig != norm)
-            yield pdf
-
-    return df.mapInPandas(run, schema=schema)

@@ -542,90 +542,25 @@ def _candidates_from_banded(banded: DataFrame,
              .distinct())
 
 
-def minhash_signature_oph(shingles: Column, num_hashes: int = 64,
-                          seed: int = 42) -> Column:
-    """One-permutation hashing (Li/Owen/Zhang, NIPS 2012) with
-    rotation densification (Shrivastava/Li, ICML 2014): ONE xxhash64
-    per shingle scattered into ``num_hashes`` bins (bin = h mod k,
-    value = min h in bin); empty bins borrow from the next non-empty
-    bin to the right (circular), offset by hops * C so borrowed cells
-    stay decorrelated across bins. O(|shingles|) work per row vs the
-    K-permutation form's O(|shingles| * k) — the asymptotic win for
-    long documents at corpus scale.
-
-    A DIFFERENT hash family than minhash_signature/_arrow (bin
-    occupancy replaces independent permutations), so its pair sets are
-    its own: recall-vs-exact is contract-tested separately; do not mix
-    impl= values across a stored signature artifact.
-
-    Measured honestly: end-to-end at sf0.1 the dedup pipeline is
-    SHINGLE-bound (regex split + zip + distinct dominates), so OPH's
-    asymptotic signature win over the vectorized K-perm twin is
-    marginal here (~4.1s vs ~3.9s signature pass on 2k-shingle docs,
-    k=128); it becomes the right choice when k grows (bands x rows)
-    or shingling is amortized via a stored artifact."""
-    prime = (1 << 31) - 1
-    big = np.int64(_LONG_MAX)
-    offset_c = np.int64(0x9E3779B1)   # golden-ratio odd constant
-
-    @pandas_udf("array<long>")
-    def _sig(hashed: pd.Series) -> pd.Series:
-        k = num_hashes
-        base = np.arange(k)
-        out = []
-        for arr in hashed:
-            if arr is None or len(arr) == 0:
-                out.append(np.full(k, _LONG_MAX, dtype=np.int64))
-                continue
-            h = np.asarray(arr, dtype=np.int64)
-            sig = np.full(k, big, dtype=np.int64)
-            np.minimum.at(sig, h % k, h // k)
-            filled = sig != big
-            if filled.any() and not filled.all():
-                f2 = np.concatenate([filled, filled])
-                pos = np.arange(2 * k)
-                cand = np.where(f2, pos, 2 * k)
-                nxt = np.minimum.accumulate(cand[::-1])[::-1][:k]
-                hops = nxt - base
-                src = nxt % k
-                sig = np.where(filled, sig,
-                               (sig[src] + hops * offset_c) % prime)
-            out.append(sig)
-        return pd.Series(out)
-
-    hashed = F.transform(
-        shingles,
-        lambda s: F.xxhash64(s).bitwiseAND(F.lit(0x7FFFFFFF).cast("long")))
-    return _sig(hashed)
-
-
-def _sig_fn(impl: str):
-    if impl == "arrow":
-        return minhash_signature_arrow
-    if impl == "jvm":
-        return minhash_signature
-    if impl == "oph":
-        return minhash_signature_oph
-    raise ValueError(f"unknown minhash impl {impl!r} (arrow|jvm|oph)")
-
-
-def _sig_col(impl: str, num_hashes: int, base_hash=None) -> Column:
+def _sig_col(num_hashes: int, base_hash=None) -> Column:
     """Signature Column over ``col("sh")`` — a constant tree per
-    (impl, num_hashes) when the default base hash is used (the
+    ``num_hashes`` when the default base hash is used (the
     coefficient arrays alone are 256 literals = 256 py4j round-trips),
     so the production path builds it once per gateway (cached_exprs,
     the q26 idiom).  Custom ``base_hash`` callables (portable twins)
     are not cached — their identity isn't a stable key."""
     if base_hash is not None:
-        return _sig_fn(impl)(F.col("sh"), num_hashes, base_hash=base_hash)
+        return minhash_signature_arrow(F.col("sh"), num_hashes,
+                                       base_hash=base_hash)
     from ..session import cached_exprs
-    return cached_exprs(("minhash_sig", impl, num_hashes),
-                        lambda: _sig_fn(impl)(F.col("sh"), num_hashes))
+    return cached_exprs(("minhash_sig", num_hashes),
+                        lambda: minhash_signature_arrow(F.col("sh"),
+                                                        num_hashes))
 
 
 def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
                            n: int = 3, num_hashes: int = 128,
-                           bands: int = 32, impl: str = "arrow") -> DataFrame:
+                           bands: int = 32) -> DataFrame:
     """Candidate pairs from banded MinHash buckets (id1 < id2).
 
     rows-per-band r = num_hashes // bands; detection probability
@@ -639,15 +574,14 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
     """
     sig = df.select(
         F.col(id_col).alias("id"),
-        _sig_fn(impl)(word_shingles(F.col(text_col), n),
-                      num_hashes).alias("sig"))
+        minhash_signature_arrow(word_shingles(F.col(text_col), n),
+                                num_hashes).alias("sig"))
     return _lsh_candidates_from_sig(sig, num_hashes, bands)
 
 
 def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
                         n: int = 3, num_hashes: int = 128, bands: int = 32,
-                        threshold: float = 0.8,
-                        impl: str = "arrow", base_hash=None,
+                        threshold: float = 0.8, base_hash=None,
                         max_bucket: int | None = None) -> DataFrame:
     """LSH candidates verified by exact Jaccard >= threshold.
 
@@ -661,8 +595,7 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     (see :func:`_lsh_candidates_from_sig`)."""
     sh = df.select(F.col(id_col).alias("id"),
                    shingle_col(text_col, n).alias("sh")).persist()
-    sig = sh.select("id", _sig_col(impl, num_hashes,
-                                   base_hash).alias("sig"))
+    sig = sh.select("id", _sig_col(num_hashes, base_hash).alias("sig"))
     # persist the banded table: BOTH sides of the candidate self-join
     # read it, so without materialization the explode + 32-slice
     # xxhash64 banding (and the signature map above it) runs twice —
@@ -685,45 +618,6 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
 # guarded); above it the candidate blowup is quadratic in cluster
 # width (800-doc cluster: 21.1 s as-is vs 3.3 s guarded, 6.4x).
 LSH_GUARD_CROSSOVER = 256
-
-
-def lsh_bucket_profile(sig: DataFrame, num_hashes: int,
-                       bands: int) -> dict:
-    """Skew diagnostic for the banded LSH join — the (band, bucket)
-    analogue of qx_key_skew_profile: width of the hottest bucket,
-    bucket count, banded row count.  One map-side-combined groupBy
-    plus a 1-row aggregate; O(1) driver rows."""
-    return _profile_from_banded(banded_rows(sig, num_hashes, bands))
-
-
-def _profile_from_banded(banded: DataFrame) -> dict:
-    row = (banded
-           .groupBy("band", "bucket")
-           .agg(F.count(F.lit(1)).alias("w"))
-           .agg(F.max("w").alias("top"),
-                F.count(F.lit(1)).alias("n_buckets"),
-                F.sum("w").alias("n_rows")).collect()[0])
-    return {"top_bucket_width": int(row.top or 0),
-            "n_buckets": int(row.n_buckets or 0),
-            "n_banded_rows": int(row.n_rows or 0)}
-
-
-def choose_lsh_guard(profile: dict,
-                     crossover: int = LSH_GUARD_CROSSOVER) -> dict:
-    """Diagnose-then-enable policy (VERDICT r5 ask #5): enable the
-    hot-bucket guard only when the MEASURED top bucket width exceeds
-    the documented crossover — a guard below it costs a count pass
-    for nothing, a missing guard above it is the measured 21 s
-    straggler.  Returns the decision with its evidence."""
-    top = profile["top_bucket_width"]
-    on = top > crossover
-    return {"max_bucket": crossover if on else None,
-            "top_bucket_width": top,
-            "crossover": crossover,
-            "reason": (f"top bucket width {top} > crossover {crossover}: "
-                       "hot-cluster guard ON" if on else
-                       f"top bucket width {top} <= crossover {crossover}: "
-                       "exact candidate semantics kept")}
 
 
 def _guard_banded_width(banded: DataFrame, max_bucket: int) -> DataFrame:
@@ -764,19 +658,10 @@ def _pairs_from_bucketed(rel: DataFrame) -> DataFrame:
              .distinct())
 
 
-def _candidates_from_banded_guarded(banded: DataFrame,
-                                    max_bucket: int) -> DataFrame:
-    """:func:`_guard_banded_width` + :func:`_pairs_from_bucketed` in
-    one unpersisted plan (library entry point; the auto query path
-    persists the guarded relation between the two instead — see
-    :func:`minhash_dedup_pairs_auto`)."""
-    return _pairs_from_bucketed(_guard_banded_width(banded, max_bucket))
-
-
 def minhash_dedup_pairs_auto(df: DataFrame, id_col: str, text_col: str,
                              n: int = 3, num_hashes: int = 128,
                              bands: int = 32, threshold: float = 0.8,
-                             impl: str = "arrow", base_hash=None,
+                             base_hash=None,
                              crossover: int = LSH_GUARD_CROSSOVER
                              ) -> DataFrame:
     """:func:`minhash_dedup_pairs` with the hot-bucket guard applied
@@ -784,14 +669,13 @@ def minhash_dedup_pairs_auto(df: DataFrame, id_col: str, text_col: str,
     from pair generation by an in-plan width window — provably the
     same pair set as the old measure->decide pre-pass (the filter is
     vacuous exactly when the old profile chose guard-off; see
-    :func:`_candidates_from_banded_guarded`), with zero extra driver
+    :func:`_guard_banded_width`), with zero extra driver
     actions.  The policy + crossover are stamped into the result
     schema's column metadata under ``lsh_guard`` so the evidence
     travels with the plan and any parquet the caller writes."""
     sh = df.select(F.col(id_col).alias("id"),
                    shingle_col(text_col, n).alias("sh")).persist()
-    sig = sh.select("id", _sig_col(impl, num_hashes,
-                                   base_hash).alias("sig"))
+    sig = sh.select("id", _sig_col(num_hashes, base_hash).alias("sig"))
     # persist the GUARDED (width-windowed) banded relation, not the
     # raw banded table (VERDICT r8 ask #3): both self-join sides read
     # it, so persisting below the window made each side re-run the
@@ -821,7 +705,7 @@ def minhash_dedup_pairs_auto(df: DataFrame, id_col: str, text_col: str,
 
 def minhash_artifact(df: DataFrame, id_col: str, text_col: str,
                      n: int = 3, num_hashes: int = 128,
-                     impl: str = "arrow", base_hash=None) -> DataFrame:
+                     base_hash=None) -> DataFrame:
     """The checkpointable dedup artifact: (id, sh, sig) — shingle sets
     and minhash signatures. A daily pipeline writes this table once
     per corpus generation (parquet round-trips both array columns) and
@@ -832,14 +716,14 @@ def minhash_artifact(df: DataFrame, id_col: str, text_col: str,
                    word_shingles(F.col(text_col), n).alias("sh"))
     kw = {} if base_hash is None else {"base_hash": base_hash}
     return sh.select("id", "sh",
-                     _sig_fn(impl)(F.col("sh"), num_hashes, **kw).alias("sig"))
+                     minhash_signature_arrow(F.col("sh"), num_hashes,
+                                             **kw).alias("sig"))
 
 
 def incremental_minhash_dedup(corpus: DataFrame, new_docs: DataFrame,
                               id_col: str, text_col: str,
                               n: int = 3, num_hashes: int = 128,
                               bands: int = 32, threshold: float = 0.8,
-                              impl: str = "arrow",
                               corpus_artifact: DataFrame | None = None,
                               base_hash=None) -> DataFrame:
     """Daily-ingest dedup: flag NEW documents that near-duplicate the
@@ -861,8 +745,7 @@ def incremental_minhash_dedup(corpus: DataFrame, new_docs: DataFrame,
     corpus-sized)."""
     if corpus_artifact is None:
         corpus_artifact = minhash_artifact(corpus, id_col, text_col, n,
-                                           num_hashes, impl,
-                                           base_hash=base_hash)
+                                           num_hashes, base_hash=base_hash)
     c_art = corpus_artifact.select("id", "sh", "sig")
     # the NEW side's artifact is persisted separately and banded from
     # its OWN table: the broadcast subtree must never contain the
@@ -871,8 +754,7 @@ def incremental_minhash_dedup(corpus: DataFrame, new_docs: DataFrame,
     # slower than the full batch at 16x, the exact failure this
     # operator exists to avoid)
     n_art = minhash_artifact(new_docs, id_col, text_col, n,
-                             num_hashes, impl,
-                             base_hash=base_hash).persist()
+                             num_hashes, base_hash=base_hash).persist()
     art = c_art.unionByName(n_art).persist()
     sh = art.select("id", "sh")
     banded = banded_rows(art.select("id", "sig"), num_hashes, bands)
@@ -900,7 +782,6 @@ def incremental_minhash_dedup(corpus: DataFrame, new_docs: DataFrame,
 def minhash_agreement_pairs(df: DataFrame, id_col: str, text_col: str,
                             n: int = 3, num_hashes: int = 64,
                             bands: int = 16, threshold: float = 0.5,
-                            impl: str = "arrow",
                             base_hash=None) -> DataFrame:
     """LSH candidates scored by SIGNATURE AGREEMENT (fraction of equal
     minhash positions — the unbiased MinHash estimate of Jaccard)
@@ -912,8 +793,9 @@ def minhash_agreement_pairs(df: DataFrame, id_col: str, text_col: str,
     zip_with over two 64-long signatures per candidate."""
     kw = {} if base_hash is None else {"base_hash": base_hash}
     sig = df.select(F.col(id_col).alias("id"),
-                    _sig_fn(impl)(word_shingles(F.col(text_col), n),
-                                  num_hashes, **kw).alias("sig")).persist()
+                    minhash_signature_arrow(
+                        word_shingles(F.col(text_col), n),
+                        num_hashes, **kw).alias("sig")).persist()
     cands = _lsh_candidates_from_sig(sig, num_hashes, bands)
     joined = (cands
               .join(sig.select(F.col("id").alias("id1"),
@@ -1251,8 +1133,7 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
                        k: int = 3, w: int = 4,
                        threshold: float = 0.5,
                        max_df: int | None = None,
-                       mirrorable: bool = False,
-                       impl: str = "arrow") -> DataFrame:
+                       mirrorable: bool = False) -> DataFrame:
     """Near-dup pairs by winnowing-fingerprint overlap (the MOSS
     matching scheme on top of textquality.winnow_fingerprint).
 
@@ -1274,20 +1155,17 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     generation (scale probe: flattens the curve at 16x corpus);
     shared counts then UNDER-count for pairs relying on dropped
     fingerprints. None keeps exact scoring."""
-    from .textquality import (gram_hashes, winnow_fingerprint,
-                              winnow_fingerprint_arrow)
+    from .textquality import gram_hashes, winnow_fingerprint_arrow
 
     from ..session import cached_exprs
 
-    winnow = {"arrow": winnow_fingerprint_arrow,
-              "jvm": winnow_fingerprint}[impl]
     # gram-hash and winnow columns are constant trees per knob set —
     # built once per gateway (cached_exprs, r8)
     hs_col = cached_exprs(("gram_hashes", text_col, k, mirrorable),
                           lambda: gram_hashes(F.col(text_col), k,
                                               mirrorable=mirrorable))
-    fps_col = cached_exprs(("winnow_fp", impl, w),
-                           lambda: winnow(F.col("hs"), w))
+    fps_col = cached_exprs(("winnow_fp", w),
+                           lambda: winnow_fingerprint_arrow(F.col("hs"), w))
     hashed = df.select(F.col(id_col).alias("id"), hs_col.alias("hs"))
     # the fingerprint table feeds FOUR branches (both sides of the
     # self-join + two size joins); without persist the whole

@@ -6,7 +6,7 @@ one boilerplate shingle) or a join repeated across many jobs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # algebraic aggregates that re-combine across salt buckets
@@ -91,28 +91,6 @@ def salted_join(fact: DataFrame, dim: DataFrame, key: str,
                                          F.lit(salt_buckets - 1)))
                   .otherwise(F.array(F.lit(0)))))
     return f.join(d, [key, "__salt"]).drop("__salt")
-
-
-def write_bucketed(df: DataFrame, table: str, keys: list[str],
-                   num_buckets: int = 8,
-                   sort_keys: list[str] | None = None) -> None:
-    """Persist as a bucketed (and optionally sorted) table: joins and
-    aggregations on ``keys`` against another table bucketed the same
-    way need NO shuffle — the co-location is baked into the layout.
-    This is the 100 TB answer to 'this join runs every day on the
-    same key'."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *keys)
-    if sort_keys:
-        writer = writer.sortBy(*sort_keys)
-    writer.saveAsTable(table)
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  keys: list[str]) -> DataFrame:
-    """Join two identically-bucketed tables on their bucket keys —
-    planner produces a shuffle-free sort-merge join (asserted in
-    tests/test_scale.py)."""
-    return spark.table(left_table).join(spark.table(right_table), keys)
 
 
 def compact_latest(df: DataFrame, keys: list[str], order: list[str],

@@ -25,8 +25,6 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import cosine
-
 
 def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
@@ -145,19 +143,6 @@ def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, id_col: str,
             .filter(F.col("rank") <= k)
             .select("query_id", "rank", "corpus_id",
                     F.round("cosine_sim", 6).alias("cosine_sim")))
-
-
-def pairwise_aligned_cosine(df_a: DataFrame, df_b: DataFrame, id_col: str,
-                            vec_col: str) -> DataFrame:
-    """M15: cosine between same-id vector pairs from two tables
-    (4-structure-micro-ablation.py:136-150 with/without-feature
-    generations)."""
-    a = df_a.filter(F.col(vec_col).isNotNull()).select(F.col(id_col), _as_double(F.col(vec_col)).alias("va"))
-    b = df_b.filter(F.col(vec_col).isNotNull()).select(F.col(id_col), _as_double(F.col(vec_col)).alias("vb"))
-    return (a.join(b, id_col)
-            .select(id_col,
-                    F.round(cosine(F.col("va"), F.col("vb")), 6)
-                     .alias("cosine_sim")))
 
 
 def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, id_col: str,

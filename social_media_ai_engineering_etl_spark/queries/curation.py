@@ -620,11 +620,12 @@ SELECT bucket, CAST(batch_idx AS BIGINT) AS batch_idx,
 FROM b GROUP BY bucket, batch_idx ORDER BY bucket, batch_idx
 """)
 def qx_length_bucket_batches(spark, sf_dir):
-    """Length-grouped batch plan over the documents corpus
-    (curation.length_bucket_batches with a PORTABLE md5 in-bucket
-    order, since the oracle cannot evaluate xxhash64): per-batch real
-    vs padded token volume and the padding waste length-grouping
-    eliminates.  Integer arithmetic end to end."""
+    """Length-grouped batch plan over the documents corpus: documents
+    bucket by rounded-up token count, order by a PORTABLE md5 inside
+    each bucket (the oracle cannot evaluate xxhash64) and chop into
+    batches of 8; per-batch real vs padded token volume and the
+    padding waste length-grouping eliminates.  Integer arithmetic end
+    to end."""
     from pyspark.sql import Window
     ws = F.split(F.trim(F.col("text")), " ")
     d = (_docs(spark, sf_dir)

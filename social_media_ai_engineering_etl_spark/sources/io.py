@@ -148,31 +148,6 @@ def write_partitioned_parquet(df: DataFrame, path: str,
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
-def overwrite_partitions(df: DataFrame, path: str,
-                         partition_cols: tuple[str, ...]) -> None:
-    """Dynamic partition overwrite — the idempotent BACKFILL primitive:
-    ``mode("overwrite")`` with ``partitionOverwriteMode=dynamic``
-    replaces ONLY the partition directories present in ``df`` and
-    leaves every other partition untouched (static mode would truncate
-    the whole table first).  Re-running a day's backfill is therefore
-    a no-op-or-fix, never a data loss: the unit of atomicity is the
-    partition directory, matching how a 100 TB table is actually
-    repaired — one day / one language at a time.
-
-    The conf is set per-write and restored: at session scope dynamic
-    mode would silently change the semantics of every other overwrite
-    in the process (tests/test_manifest_io.py pins both behaviours).
-    """
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(key, before)
-
-
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """ORC sink (built into Spark, zero extra deps) — the columnar
     alternative where the downstream warehouse is Hive/Trino-first;

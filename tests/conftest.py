@@ -101,7 +101,6 @@ SLOW_TESTS = {
     "test_dedup.py::test_ivfpq_recall_and_exact_scores",  # 7.7s
     "test_dedup.py::test_lsh_topk_subset_of_bruteforce_scores",  # 14.3s
     "test_dedup.py::test_minhash_recall_vs_exact",  # 16.4s
-    "test_dedup.py::test_oph_minhash_recall_vs_exact",  # 8.3s
     "test_dedup.py::test_semantic_contamination_blocked_path_matches_broadcast",  # 9.8s
     "test_dedup.py::test_semantic_contamination_flags_planted_leak",  # 5.3s
     "test_dedup.py::test_simhash_wide_production_path_finds_near_not_far",  # 25.4s
@@ -116,7 +115,6 @@ SLOW_TESTS = {
     "test_graph.py::test_pagerank_matches_numpy_power_iteration",  # 10.0s
     "test_graph.py::test_pagerank_sum_is_node_count",  # 6.3s
     "test_manifest_io.py::test_cli_list_and_run",  # 25.4s
-    "test_manifest_io.py::test_dynamic_partition_overwrite_is_partition_scoped",  # 9.8s
     "test_manifest_io.py::test_e2e_written_artifacts_oracle_checked",  # 48.1s
     "test_manifest_io.py::test_staged_e2e_pipeline_config_invalidates",  # 5.8s
     "test_null_semantics.py::test_funnel_reports_zero_user_steps",  # 11.1s
@@ -185,12 +183,14 @@ def pytest_collection_modifyitems(config, items):
         key = f"{fname}::{item.name}"
         if fname in SLOW_FILES:
             item.add_marker(pytest.mark.slow)
+            matched.add(fname)
         elif key in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
             matched.add(key)
-    # a renamed test must not silently fall out of the manifest: when
-    # the WHOLE suite is collected, every manifest entry must match
-    # (subset runs -- -k / single files -- legitimately match fewer)
+    # a renamed test or file must not silently fall out of the manifest
+    # (and into the fast tier): when the WHOLE suite is collected, every
+    # manifest entry must match (subset runs -- -k / single files --
+    # legitimately match fewer)
     if len(items) >= 600:
-        stale = set(SLOW_TESTS) - matched
-        assert not stale, f"stale SLOW_TESTS manifest entries: {sorted(stale)}"
+        stale = (SLOW_FILES | SLOW_TESTS) - matched
+        assert not stale, f"stale slow-tier manifest entries: {sorted(stale)}"

@@ -458,35 +458,6 @@ def test_mixture_temperature_flattens_shares(spark):
         assert abs(kept_ppm - plan.loc[d, "target_ppm"]) < 25_000, d
 
 
-def test_length_bucket_batches_beat_random_batching(spark):
-    """The point of length-grouping: padded volume must be well below
-    what hash-random batches pay on a length-varied corpus, and every
-    document lands in exactly one batch."""
-    from pyspark.sql import Window
-    from social_media_ai_engineering_etl_spark.operators.curation import (
-        length_bucket_batches)
-    import numpy as np
-    rng = np.random.default_rng(5)
-    lens = np.concatenate([rng.integers(5, 40, 400),
-                           rng.integers(200, 400, 100)])
-    df = spark.createDataFrame(
-        [(i, int(n)) for i, n in enumerate(lens)], ["doc_id", "n"])
-    plan = length_bucket_batches(df, "doc_id", F.col("n"),
-                                 batch_size=8, bucket_step=16).toPandas()
-    assert plan["n_docs"].sum() == 500
-    grouped_waste = plan["padding_waste"].sum()
-    # random batching: same batch size, hash order ignoring length
-    w = Window.orderBy(F.xxhash64(F.col("doc_id")), F.col("doc_id"))
-    rand = (df.withColumn("b", ((F.row_number().over(w) - 1) / 8)
-                          .cast("long"))
-            .groupBy("b").agg(F.count(F.lit(1)).alias("k"),
-                              F.sum("n").alias("real"),
-                              F.max("n").alias("mx"))
-            .toPandas())
-    random_waste = (rand["k"] * rand["mx"] - rand["real"]).sum()
-    assert grouped_waste * 4 < random_waste, (grouped_waste, random_waste)
-
-
 def test_encoding_anomalies_detect_planted_mojibake(spark, duck):
     """Planted U+FFFD / control chars must be counted identically by
     the Spark query and the oracle pattern (guards the regex-dialect
@@ -517,33 +488,6 @@ def test_encoding_anomalies_detect_planted_mojibake(spark, duck):
         FROM documents_tmp2 GROUP BY source ORDER BY source
     """).fetchdf().set_index("source")
     assert int(dd.loc["s1", "r"]) == 2 and int(dd.loc["s2", "c"]) == 1
-
-
-def test_normalize_unicode_matches_duckdb_nfc(spark, duck):
-    """NFC parity with DuckDB's independent normalizer on planted
-    decomposed/precomposed/compatibility fixtures, and the
-    was_denormalized flag marks exactly the changed rows."""
-    from social_media_ai_engineering_etl_spark.operators.curation import (
-        normalize_unicode,
-    )
-    rows = [
-        (1, "café"),                 # precomposed, already NFC
-        (2, "café"),                # decomposed -> composes
-        (3, "Å"),                   # A + ring -> Å
-        (4, "ﬁle"),                  # fi ligature: NFC keeps it
-        (5, "plain ascii"),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    got = {r["id"]: (r["text"], r["was_denormalized"])
-           for r in normalize_unicode(df, "text").collect()}
-    for i, s in rows:
-        want = duck.execute("SELECT nfc_normalize(?)", [s]).fetchone()[0]
-        assert got[i][0] == want, (i, got[i][0], want)
-        assert got[i][1] == (want != s), i
-    # NFKC folds the ligature where NFC must not
-    nfkc = {r["id"]: r["text"]
-            for r in normalize_unicode(df, "text", "NFKC").collect()}
-    assert nfkc[4] == "file" and got[4][0] == "ﬁle"
 
 
 def test_quality_classifier_gate_matches_python_reference(spark):

@@ -396,40 +396,3 @@ def test_xml_roundtrip_nested_and_explicit_schema(spark, sf_dir, tmp_path):
     # the XML reader marks all fields nullable; names/types must match
     assert [(f.name, f.dataType) for f in explicit.schema.fields] == \
         [(f.name, f.dataType) for f in docs.schema.fields]
-
-
-def test_dynamic_partition_overwrite_is_partition_scoped(spark, tmp_path):
-    """overwrite_partitions replaces only the partitions present in
-    the incoming frame (idempotent day-backfill); a plain static
-    overwrite of the same frame truncates the whole table."""
-    from pyspark.sql import functions as F
-
-    from social_media_ai_engineering_etl_spark.sources.io import (
-        overwrite_partitions,
-        write_partitioned_parquet,
-    )
-    base = spark.createDataFrame(
-        [(d, i, float(i)) for d in ("d1", "d2", "d3") for i in range(10)],
-        "day string, k int, v double")
-    path = str(tmp_path / "t")
-    write_partitioned_parquet(base, path, ("day",))
-    assert spark.read.parquet(path).count() == 30
-
-    # backfill d2 with corrected values (5 rows instead of 10)
-    fix = spark.createDataFrame(
-        [("d2", i, float(i) * 100) for i in range(5)],
-        "day string, k int, v double")
-    overwrite_partitions(fix, path, ("day",))
-    t = spark.read.parquet(path)
-    assert t.count() == 25  # d1:10 + d2:5 + d3:10
-    assert t.filter("day = 'd2'").agg(
-        F.sum("v")).collect()[0][0] == sum(i * 100 for i in range(5))
-    assert t.filter("day = 'd1'").count() == 10
-    # rerunning the same backfill is a no-op (idempotent)
-    overwrite_partitions(fix, path, ("day",))
-    assert spark.read.parquet(path).count() == 25
-    # conf was restored: a static overwrite now truncates everything
-    assert spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static") == "static"
-    fix.write.mode("overwrite").partitionBy("day").parquet(path)
-    assert spark.read.parquet(path).count() == 5

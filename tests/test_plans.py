@@ -552,7 +552,23 @@ def test_q26_rewards_scalar_codegen_compiles(spark, sf_dir):
 _EVAL_NODE = re.compile(
     r"^\(\d+\) (?:ArrowEvalPython|BatchEvalPython)\n"
     r"((?:(?!\n\(\d+\) ).)*)", re.M | re.S)
-_UDF_CALLS = re.compile(r"Arguments: \[(.*?)\], \[", re.S)
+
+
+def _udf_arguments(detail: str) -> str:
+    """The UDF-call list of one eval node: the bracket-balanced first
+    ``[...]`` after ``Arguments:`` (a UDF argument may itself contain
+    ``], [``, which would cut a non-greedy match short)."""
+    assert "Arguments: [" in detail, f"eval node without Arguments: {detail[:200]!r}"
+    start = detail.index("Arguments: [") + len("Arguments: ")
+    depth = 0
+    for i in range(start, len(detail)):
+        if detail[i] == "[":
+            depth += 1
+        elif detail[i] == "]":
+            depth -= 1
+            if depth == 0:
+                return detail[start + 1:i]
+    raise AssertionError(f"unbalanced Arguments list: {detail[:200]!r}")
 
 
 def _normalized_udf_evals(plan: str) -> list[str]:
@@ -565,11 +581,7 @@ def _normalized_udf_evals(plan: str) -> list[str]:
     every surviving row pays the UDF twice."""
     out = []
     for m in _EVAL_NODE.finditer(plan):
-        detail = m.group(1)
-        call = _UDF_CALLS.search(detail)
-        if not call:
-            continue
-        norm = re.sub(r"#\d+[L]?", "#", call.group(1))
+        norm = re.sub(r"#\d+[L]?", "#", _udf_arguments(m.group(1)))
         norm = re.sub(r"lambda [a-z_]+#?\d*", "lambda", norm)
         norm = re.sub(r"plan_id=\d+", "plan_id=", norm)
         out.append(norm.strip())
@@ -585,9 +597,11 @@ def test_no_benched_plan_duplicates_a_python_udf(spark, sf_dir):
     appears in more than one ArrowEvalPython/BatchEvalPython node."""
     from social_media_ai_engineering_etl_spark.registry import BENCH
 
+    n_evals = 0
     for name in sorted(set(BENCH) | {"q07_clean_topics"}):
         df = QUERIES[name](spark, sf_dir)
         evals = _normalized_udf_evals(plan_of(df))
+        n_evals += len(evals)
         dupes = {e for e in evals if evals.count(e) > 1}
         spark.catalog.clearCache()
         assert not dupes, (
@@ -595,3 +609,7 @@ def test_no_benched_plan_duplicates_a_python_udf(spark, sf_dir):
             f"duplicates — optimizer re-evaluation (guide §4.4); "
             f"mark the UDF nondeterministic or cache the column: "
             f"{sorted(dupes)[:1]}")
+    # fail closed: q07, minhash and winnow each plan an Arrow eval, so
+    # a sweep that extracted none means the plan format moved under
+    # the regexes, not that the plans are clean
+    assert n_evals > 0, "no ArrowEvalPython/BatchEvalPython node found"

@@ -1,8 +1,7 @@
-"""Scale-utility tests: salted aggregation equivalence, shuffle-free
-bucketed joins, IVF recall vs the exact baseline."""
+"""Scale-utility tests: salted aggregation equivalence, IVF recall vs
+the exact baseline."""
 
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -67,33 +66,6 @@ def test_salted_aggregate_rejects_non_algebraic(spark, sf_dir):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     with pytest.raises(ValueError):
         scale.salted_aggregate(docs, ["lang"], {"m": ("doc_id", "median")})
-
-
-def test_bucketed_join_is_shuffle_free(spark, sf_dir):
-    import contextlib
-    import io
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    suffix = uuid.uuid4().hex[:8]
-    lt, rt = f"bl_{suffix}", f"br_{suffix}"
-    scale.write_bucketed(docs.select("doc_id", "lang"), lt,
-                         ["doc_id"], num_buckets=4, sort_keys=["doc_id"])
-    scale.write_bucketed(docs.select("doc_id", "source"), rt,
-                         ["doc_id"], num_buckets=4, sort_keys=["doc_id"])
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = scale.bucketed_join(spark, lt, rt, ["doc_id"])
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan      # co-located: no shuffle
-        assert joined.count() == docs.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
-        spark.sql(f"DROP TABLE IF EXISTS {lt}")
-        spark.sql(f"DROP TABLE IF EXISTS {rt}")
 
 
 def test_ivf_recall_vs_bruteforce(spark, sf_dir):
