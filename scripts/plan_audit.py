@@ -5,7 +5,10 @@ scale smell:
   * CartesianProduct / BroadcastNestedLoopJoin (pair blow-up),
   * an unpartitioned windowspecdefinition (single-partition sort),
 
-then print a whitelist-aware summary.  Planning only — no actions are
+then print a whitelist-aware summary.  The whitelists fail closed:
+an exempted query whose plan no longer has the smell it is exempted
+for (or that is no longer registered) is flagged as a stale
+exemption.  Planning only — no actions are
 executed except the bounded driver-side work some operators do at
 plan-build time (collected query matrices, ntile offset maps, BPE
 rounds).
@@ -26,11 +29,8 @@ from social_media_ai_engineering_etl_spark.registry import QUERIES  # noqa: E402
 from social_media_ai_engineering_etl_spark.session import get_spark  # noqa: E402
 
 # tiny-frame global windows documented fine by construction (bounded
-# row counts: daily spine, merge table, percentile bands)
-SMALL_GLOBAL_WINDOW_OK = {
-    "qs_daily_active_users", "qx_seasonal_residuals", "qm_importance_merged",
-    "qx_value_percentile_bands", "qx_conversion_latency_bands",
-}
+# row counts: daily spine, seasonal residual table)
+SMALL_GLOBAL_WINDOW_OK = {"qs_daily_active_users", "qx_seasonal_residuals"}
 
 _AGG_1ROW = re.compile(r"Aggregate\(keys?=\[\]")
 _WRAPPER = re.compile(r"^\s*[+:|\- ]*\s*(Project|Filter) ")
@@ -40,11 +40,10 @@ _WRAPPER = re.compile(r"^\s*[+:|\- ]*\s*(Project|Filter) ")
 # statically — each reviewed and bounded by construction:
 #   q21_separability  — per-cluster centroid table (k <= n_centroids)
 #   qx_ab_test_welch  — per-variant moment table (2 buckets)
-#   qx_similarity_topk / _ivf — query / centroid tables, small by the
-#   ANN contract (documented in operators/similarity.py)
+#   qx_similarity_topk — the query table, small by the ANN contract
+#   (documented in operators/similarity.py)
 BOUNDED_BROADCAST_OK = {
-    "q21_separability", "qx_ab_test_welch",
-    "qx_similarity_topk", "qx_similarity_topk_ivf",
+    "q21_separability", "qx_ab_test_welch", "qx_similarity_topk",
 }
 
 
@@ -82,20 +81,28 @@ def main() -> None:
         smells = []
         if "CartesianProduct" in plan:
             smells.append("CartesianProduct")
-        if ("BroadcastNestedLoopJoin" in plan
-                and name not in BOUNDED_BROADCAST_OK
-                and not _bnlj_is_benign(plan)):
-            smells.append("BroadcastNestedLoopJoin")
+        bnlj = ("BroadcastNestedLoopJoin" in plan
+                and not _bnlj_is_benign(plan))
         # an unpartitioned window's FIRST argument is already a sort
         # spec ("col#1 ASC NULLS FIRST"); partitioned ones list plain
         # partition columns before any sort spec
-        if name not in SMALL_GLOBAL_WINDOW_OK and re.search(
-                r"windowspecdefinition\([^,()]*\s(?:ASC|DESC)", plan):
-            smells.append("unpartitioned-window")
+        global_window = re.search(
+            r"windowspecdefinition\([^,()]*\s(?:ASC|DESC)", plan)
+        for hit, smell, ok, ok_name in (
+                (bnlj, "BroadcastNestedLoopJoin", BOUNDED_BROADCAST_OK,
+                 "BOUNDED_BROADCAST_OK"),
+                (global_window, "unpartitioned-window",
+                 SMALL_GLOBAL_WINDOW_OK, "SMALL_GLOBAL_WINDOW_OK")):
+            if hit and name not in ok:
+                smells.append(smell)
+            elif not hit and name in ok:
+                smells.append(f"stale {ok_name} entry")
         if smells:
             bad[name] = smells
         print(f"# {name}: {'/'.join(smells) if smells else 'clean'}",
               file=sys.stderr)
+    for name in (BOUNDED_BROADCAST_OK | SMALL_GLOBAL_WINDOW_OK) - set(QUERIES):
+        bad[name] = ["stale exemption: not a registered query"]
     print(f"audited {len(QUERIES)} queries; flagged {len(bad)}")
     for name, smells in sorted(bad.items()):
         print(f"  {name}: {', '.join(smells)}")

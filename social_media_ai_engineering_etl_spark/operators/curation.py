@@ -183,10 +183,15 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
     # shingle_col = word_shingles over the NAMED column via the
     # per-gateway constant-tree cache (r9 build sweep): the
     # split+slice+zip tree costs ~40 ms of py4j round-trips per build
-    # and this operator used to build it twice per call
-    grams = F.explode(shingle_col(text_col, n)).alias("gram")
-    bench = benchmark.select(F.col(id_col).alias("bench_id"), grams)
-    corp = corpus.select(F.col(id_col).alias("doc_id"), grams)
+    # and this operator used to build it twice per call. The explode
+    # and its alias are built per join side: one shared aliased Column
+    # would give both sides the same exprId and leave the join to the
+    # analyzer's deduplication
+    sh = shingle_col(text_col, n)
+    bench = benchmark.select(F.col(id_col).alias("bench_id"),
+                             F.explode(sh).alias("gram"))
+    corp = corpus.select(F.col(id_col).alias("doc_id"),
+                         F.explode(sh).alias("gram"))
     hits = corp.join(F.broadcast(bench), "gram")
     return (hits.groupBy("doc_id")
             .agg(F.count_distinct("gram").alias("n_shared_grams"),
@@ -474,11 +479,14 @@ def decontaminate_bloom(corpus: DataFrame, benchmark: DataFrame,
     (same oracle) — the bloom can only let extra candidates INTO the
     verify join, never drop a true hit."""
     from .dedup import shingle_col
-    grams = F.explode(shingle_col(text_col, n)).alias("gram")
-    bench = benchmark.select(F.col(id_col).alias("bench_id"), grams)
+    # explode + alias per join side, as in decontaminate
+    sh = shingle_col(text_col, n)
+    bench = benchmark.select(F.col(id_col).alias("bench_id"),
+                             F.explode(sh).alias("gram"))
     bitmap = bloom_bitmap(bench.select("gram").distinct(), "gram",
                           m_bits, k)
-    corp = (corpus.select(F.col(id_col).alias("doc_id"), grams)
+    corp = (corpus.select(F.col(id_col).alias("doc_id"),
+                          F.explode(sh).alias("gram"))
             .filter(bloom_might_contain("gram", bitmap, m_bits, k)))
     hits = corp.join(bench, "gram")
     return (hits.groupBy("doc_id")

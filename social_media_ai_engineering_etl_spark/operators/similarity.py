@@ -1,20 +1,22 @@
 """Similarity search over embedding columns (north-star extension).
 
-Five paths, trading exactness for different scale bottlenecks:
+Six paths, trading exactness for different scale bottlenecks:
   * brute-force cosine top-k — interpreted JVM fold per pair; exact,
     the correctness baseline;
   * GEMM top-k — exact, one BLAS matmul per Arrow batch, per-batch
     partial top-k (compute-bound scale path);
   * hyperplane-LSH bucketed top-k — deterministic seeded planes,
     candidates only within matching buckets (collision-bound path);
-  * IVF — KMeans cells + n_probe nearest-cell rerank (cluster-pruned
-    path);
+  * IVF — coarse-quantizer cells + n_probe nearest-cell rerank
+    (cluster-pruned path);
   * PQ + exact rerank — corpus as m centroid codes (16-32x memory
     cut), lookup-table scan, shortlist reranked with true floats
     (memory-bound path);
   * IVF-PQ — cells prune WHICH rows are scanned, codes shrink WHAT
     is scanned, rerank restores true scores (the FAISS-style
     production composition).
+Each ANN index has one search path; its quantizers (IVF centroids, PQ
+codebooks) are arguments, trained by KMeans / Lloyd when not given.
 Near-dup pair generation: exact blocked GEMM and in-bucket-GEMM LSH.
 """
 
@@ -145,101 +147,55 @@ def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, id_col: str,
                     F.round("cosine_sim", 6).alias("cosine_sim")))
 
 
-def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, id_col: str,
-                    vec_col: str, k: int = 5, n_centroids: int = 16,
-                    n_probe: int = 4, seed: int = 42) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: KMeans partitions the
-    corpus into ``n_centroids`` cells; each query probes only its
-    ``n_probe`` nearest cells and reranks those candidates exactly.
-
-    Scale shape: the centroid table is tiny (n_centroids rows) and
-    broadcast twice — once to assign query probes, never to the
-    corpus (cell ids are precomputed by the fitted model). Candidate
-    generation is a (cell) equi-join touching ~n_probe/n_centroids of
-    the corpus per query; recall/latency trades via n_probe."""
-    # the k-clamp must count the SAME frame KMeans is fit on (the
-    # null-filtered one) — a corpus dominated by null vectors would
-    # otherwise pass a k > actual-points to MLlib and crash the fit
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    n_avail = corpus.limit(n_centroids).count()
-    if n_avail == 0 or queries.isEmpty():
-        # empty slice (or no queries): no codebook/centroids can be
-        # trained -> empty result with the standard top-k schema
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, rank int, corpus_id long, "
-                "cosine_sim double")
-    # tiny corpora: KMeans refuses k > points (FAISS clamps the same
-    # way) and requires k >= 2 — below that, cells are meaningless and
-    # exact GEMM over the whole corpus IS the flat-index fallback
-    n_centroids = min(n_centroids, n_avail)
-    if n_centroids < 2:
-        return cosine_topk_gemm(corpus, queries, id_col, vec_col, k=k)
-    n_probe = min(n_probe, n_centroids)
+def _kmeans_centroids(corpus: DataFrame, vec_col: str, n_centroids: int,
+                      seed: int) -> list[list[float]]:
+    """The IVF family's coarse-quantizer trainer: MLlib KMeans on the
+    (already null-filtered) corpus vectors.  KMeans refuses k > points
+    (FAISS clamps the same way) and needs k >= 2, so fewer than two
+    trainable points return no centroids — the caller's cue for the
+    exact flat-index fallback."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    spark = corpus.sparkSession
-    c = corpus.select(F.col(id_col).alias("corpus_id"),
-                      _as_double(F.col(vec_col)).alias("cv"))
-    data = c.withColumn("features", array_to_vector(F.col("cv")))
+    n_centroids = min(n_centroids, corpus.limit(n_centroids).count())
+    if n_centroids < 2:
+        return []
+    data = corpus.select(
+        array_to_vector(_as_double(F.col(vec_col))).alias("features"))
     model = KMeans(k=n_centroids, seed=seed, featuresCol="features").fit(data)
-    assigned = (model.transform(data)
-                .select("corpus_id", "cv",
-                        F.col("prediction").alias("cell"))
-                .withColumn("cn", _norm(F.col("cv"))))
-
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in
-         enumerate(model.clusterCenters())],
-        "cell int, centroid array<double>")
-    q = queries.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("query_id"),
-                       _as_double(F.col(vec_col)).alias("qv"))
-    q = q.withColumn("qn", _norm(F.col("qv")))
-    cdist = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"),
-                   lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, v: acc + v)
-    wq = Window.partitionBy("query_id").orderBy(F.col("d"), F.col("cell"))
-    probes = (q.crossJoin(F.broadcast(cents))
-              .withColumn("d", cdist)
-              .withColumn("pr", F.row_number().over(wq))
-              .filter(F.col("pr") <= n_probe)
-              .select("query_id", "qv", "qn", "cell"))
-
-    dot = F.aggregate(F.zip_with(F.col("cv"), F.col("qv"),
-                                 lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    scored = (assigned.join(F.broadcast(probes), "cell")
-              .filter(F.col("corpus_id") != F.col("query_id"))
-              .withColumn("cosine_sim", _safe_cosine(dot)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
+    return [[float(x) for x in ctr] for ctr in model.clusterCenters()]
 
 
-def cosine_topk_ivf_fixed(corpus: DataFrame, queries: DataFrame,
-                          id_col: str, vec_col: str,
-                          centroids: list[list[float]], k: int = 5,
-                          n_probe: int = 4) -> DataFrame:
-    """IVF top-k with a FIXED coarse quantizer — the pluggable-
-    quantizer form of :func:`cosine_topk_ivf` (FAISS's IndexIVF takes
-    any coarse quantizer; k-means is merely the common trainer).  With
-    deterministic centroid literals (e.g. the LCG unit vectors of
-    :func:`hyperplane_planes`) the ENTIRE pipeline — cell assignment,
-    query probing, candidate equi-join, exact rerank — is
-    value-checkable cross-engine, which the KMeans-trained variant
-    can never be (MLlib's fit is engine-specific).
+def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, id_col: str,
+                    vec_col: str, k: int = 5, n_centroids: int = 16,
+                    n_probe: int = 4, seed: int = 42,
+                    centroids: list[list[float]] | None = None) -> DataFrame:
+    """IVF (inverted-file) approximate top-k: a coarse quantizer
+    partitions the corpus into cells; each query probes only its
+    ``n_probe`` nearest cells and reranks those candidates exactly.
 
-    Cell assignment is argmin squared-L2 ROUNDED to 6 decimals with a
+    The quantizer is an input (FAISS's IndexIVF takes any coarse
+    quantizer; k-means is merely the common trainer): ``centroids``
+    are used as given, or — when None — ``n_centroids`` of them are
+    trained with KMeans (``seed``).  Either way the search plan is
+    the same and value-checkable cross-engine once the centroids are
+    literals: cell = argmin squared-L2 ROUNDED to 6 decimals with a
     smallest-cell tie-break (the r4 decontamination lesson: unrounded
-    float argmins flip between engines on last-ulp ties).  Same plan
-    shape as cosine_topk_ivf: centroids are literals (nothing
-    broadcast), candidate generation is a (cell) equi-join touching
-    ~n_probe/n_centroids of the corpus per query."""
-    spark = corpus.sparkSession
+    float argmins flip between engines on last-ulp ties), queries
+    probe by the same rounded distance, candidate generation is a
+    (cell) equi-join touching ~n_probe/n_centroids of the corpus per
+    query, and the candidates are reranked by exact cosine.  Nothing
+    but the small probe table is broadcast."""
+    # the trainer must count the SAME frame KMeans is fit on (the
+    # null-filtered one) — a corpus dominated by null vectors would
+    # otherwise pass a k > actual-points to MLlib and crash the fit
+    corpus = corpus.filter(F.col(vec_col).isNotNull())
+    if centroids is None:
+        centroids = _kmeans_centroids(corpus, vec_col, n_centroids, seed)
+        if not centroids:
+            # < 2 trainable points: cells are meaningless and exact
+            # GEMM over the whole corpus IS the flat-index fallback
+            return cosine_topk_gemm(corpus, queries, id_col, vec_col, k=k)
     n_cent = len(centroids)
     n_probe = min(n_probe, n_cent)
 
@@ -250,9 +206,8 @@ def cosine_topk_ivf_fixed(corpus: DataFrame, queries: DataFrame,
             F.lit(0.0), lambda acc, v: acc + v), 6)
             for ctr in centroids]
 
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("corpus_id"),
-        _as_double(F.col(vec_col)).alias("cv"))
+    c = corpus.select(F.col(id_col).alias("corpus_id"),
+                      _as_double(F.col(vec_col)).alias("cv"))
     cd = F.array(*d2(F.col("cv")))
     # first index of the min = smallest cell id on ties
     c = (c.withColumn("cell",
@@ -287,118 +242,6 @@ def cosine_topk_ivf_fixed(corpus: DataFrame, queries: DataFrame,
             .filter(F.col("rank") <= k)
             .select("query_id", "rank", "corpus_id",
                     F.round("cosine_sim", 6).alias("cosine_sim")))
-
-
-def cosine_topk_ivfpq_fixed(corpus: DataFrame, queries: DataFrame,
-                            id_col: str, vec_col: str,
-                            centroids: list[list[float]], codebooks,
-                            k: int = 5, n_probe: int = 4) -> DataFrame:
-    """IVF-PQ with FIXED coarse quantizer AND codebooks — the
-    deterministic form of the FAISS-style composition
-    (:func:`cosine_topk_ivfpq`): cells prune WHICH corpus rows are
-    scanned, PQ codes shrink WHAT is scanned, and with both
-    quantizers as literals the whole composed pipeline is
-    value-checkable cross-engine.  Assignments use 6-dp-ROUNDED
-    argmins with smallest-index ties (the portable convention shared
-    with cosine_topk_ivf_fixed / pq_encode(portable=True)).
-
-    Plan: ONE narrow mapInPandas pass computes (id, cell, codes) per
-    corpus row; query probes are picked driver-side against the tiny
-    centroid matrix; scoring is LUT adds inside mapInPandas with
-    per-batch partial top-k — the same shuffle contract as
-    cosine_topk_pq/gemm.  No rerank (rerank_factor composes exactly
-    as in cosine_topk_pq when wanted)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    cents = np.asarray(centroids, dtype=np.float64)
-    n_cent = len(cents)
-    n_probe = min(n_probe, n_cent)
-    m, kc, dsub = codebooks.shape
-    out_schema = "query_id long, rank int, corpus_id long, approx_sim double"
-
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("long").alias("id"),
-        _as_double(F.col(vec_col)).alias("v"))
-    qpd = (queries.filter(F.col(vec_col).isNotNull())
-           .select(F.col(id_col).alias("qid"),
-                   _as_double(F.col(vec_col)).alias("qv")).toPandas())
-    if qpd.empty or c.isEmpty():
-        return spark.createDataFrame([], out_schema)
-    qids = qpd["qid"].to_numpy()
-    Q = np.stack(qpd["qv"].to_numpy()).astype(np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn == 0, 1.0, qn)
-    lut = np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m, dsub),
-                    codebooks)
-    # probe cells driver-side: rounded d2, first-min = smallest cell
-    qd = np.round(((Q[:, None, :] - cents[None, :, :]) ** 2).sum(-1), 6)
-    # stable sort: exact ties of the rounded distance keep index
-    # order, i.e. the smallest cell id wins (the portable tie-break)
-    probe_cells = np.argsort(qd, axis=1, kind="stable")[:, :n_probe]
-    probed = {int(q): set(map(int, cs))
-              for q, cs in zip(qids, probe_cells)}
-
-    def index(batches):
-        """(id, cell, codes): rounded-argmin cell + portable PQ codes
-        in one pass."""
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            d2 = np.round(((X[:, None, :] - cents[None, :, :]) ** 2)
-                          .sum(-1), 6)
-            cell = d2.argmin(1)
-            n = np.linalg.norm(X, axis=1, keepdims=True)
-            Xn = X / np.where(n == 0, 1.0, n)
-            codes = np.empty((len(Xn), m), dtype=np.int64)
-            for j in range(m):
-                S = Xn[:, j * dsub:(j + 1) * dsub]
-                dj = np.round(((S[:, None, :]
-                                - codebooks[j][None, :, :]) ** 2).sum(-1),
-                              6)
-                codes[:, j] = dj.argmin(1)
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(),
-                                "cell": cell, "codes": list(codes)})
-
-    enc = c.mapInPandas(index, "id long, cell int, codes array<long>")
-
-    def scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            ids = pdf["id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            out_q, out_c, out_s = [], [], []
-            for qi, q in enumerate(qids):
-                mask = np.fromiter((int(cl) in probed[int(q)]
-                                    for cl in cells), bool, len(cells))
-                mask &= ids != q
-                if not mask.any():
-                    continue
-                sub = codes[mask]
-                s = np.zeros(len(sub))
-                for j in range(m):
-                    s += lut[qi, j, sub[:, j]]
-                cand_ids = ids[mask]
-                # rank at the 6-dp output precision (see cosine_topk_pq)
-                order = np.lexsort((cand_ids, -np.round(s, 6)))[:k]
-                out_q.extend([q] * len(order))
-                out_c.extend(cand_ids[order])
-                out_s.extend(s[order])
-            yield pd.DataFrame({"query_id": out_q, "corpus_id": out_c,
-                                "approx_sim": out_s})
-
-    scored = enc.mapInPandas(
-        scan, "query_id long, corpus_id long, approx_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("approx_sim", 6).desc(), F.col("corpus_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("approx_sim", 6).alias("approx_sim")))
 
 
 def cosine_topk_gemm(corpus: DataFrame, queries: DataFrame,
@@ -730,92 +573,88 @@ def pq_train_codebooks(corpus: DataFrame, vec_col: str, m: int = 8,
 
 
 def pq_encode(corpus: DataFrame, id_col: str, vec_col: str,
-              codebooks, portable: bool = False) -> DataFrame:
+              codebooks, centroids=None) -> DataFrame:
     """Encode each (normalized) vector as ``m`` centroid indices —
     64 float64 dims compress to m small ints (m=8: 32x memory cut),
     which is what lets a 100 TB embedding corpus live in scan-speed
     storage. Narrow mapInPandas, no shuffle.
 
-    ``portable=True`` rounds the sub-distance to the 6-decimal output
-    precision BEFORE the argmin (first-min = smallest code on ties) —
-    the cross-engine-stable assignment the DuckDB PQ oracle replays
-    (same argmin lesson as semantic_contamination / IVF-fixed)."""
+    Every argmin rounds its squared distance to the 6-decimal output
+    precision first (first-min = smallest index on ties) — the
+    cross-engine-stable assignment the DuckDB oracles replay (same
+    argmin lesson as semantic_contamination / IVF).  With IVF
+    ``centroids`` the same pass also emits each row's coarse ``cell``
+    on the raw vector: one narrow index build, ``(id, cell, codes)``."""
     import numpy as np
     import pandas as pd
 
     m, k, dsub = codebooks.shape
+    cents = None if centroids is None else np.asarray(centroids,
+                                                      dtype=np.float64)
 
     def enc(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            out = {"id": pdf["id"].to_numpy()}
+            if cents is not None:
+                out["cell"] = np.round(((X[:, None, :] - cents[None, :, :])
+                                        ** 2).sum(-1), 6).argmin(1)
             n = np.linalg.norm(X, axis=1, keepdims=True)
             Xn = X / np.where(n == 0, 1.0, n)
             codes = np.empty((len(Xn), m), dtype=np.int64)
             for j in range(m):
                 S = Xn[:, j * dsub:(j + 1) * dsub]
                 d = ((S[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(-1)
-                if portable:
-                    d = np.round(d, 6)
-                codes[:, j] = d.argmin(1)
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(),
-                                "codes": list(codes)})
+                codes[:, j] = np.round(d, 6).argmin(1)
+            out["codes"] = list(codes)
+            yield pd.DataFrame(out)
 
     v = corpus.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("id"),
                       _as_double(F.col(vec_col)).alias("v"))
-    return v.mapInPandas(enc, "id long, codes array<long>")
+    schema = ("id long, codes array<long>" if cents is None
+              else "id long, cell int, codes array<long>")
+    return v.mapInPandas(enc, schema)
 
 
-def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
-                   vec_col: str, k: int = 5, m: int = 32, kc: int = 64,
-                   codebooks=None, rerank_factor: int = 0,
-                   portable_encode: bool = False) -> DataFrame:
-    """Approximate top-k via PQ asymmetric distance: queries stay
-    exact (normalized floats), the corpus is scanned as codes; each
-    query precomputes an (m, kc) inner-product lookup table against
-    the codebooks, and a corpus row's score is m table lookups summed
-    — no per-pair arithmetic beyond adds. Same partial-top-k shuffle
-    contract as cosine_topk_gemm (num_batches * n_queries * k rows).
-
-    ``rerank_factor > 0`` adds the standard PQ refinement: keep the
-    PQ top (rerank_factor * k) per query, fetch EXACT vectors for
-    that shortlist only (a candidate-sized join, not a corpus scan
-    of floats), recompute exact cosine, re-top-k — measured on the
-    fixture: recall@5 0.83 raw -> 0.99+ at rerank_factor=4, while
-    the float corpus is touched for only n_q * rerank_factor * k
-    rows. Recall-vs-exact contract in tests/test_dedup.py."""
+def _pq_search(corpus: DataFrame, queries: DataFrame, id_col: str,
+               vec_col: str, codebooks, k: int, rerank_factor: int,
+               centroids=None, n_probe: int = 0) -> DataFrame:
+    """The one PQ search plan behind :func:`cosine_topk_pq` and
+    :func:`cosine_topk_ivfpq`: query LUTs built driver-side, one LUT
+    scan over the encoded corpus with a per-batch partial top-k cut at
+    6 dp, a global per-query window, then (``rerank_factor > 0``) the
+    exact rerank of the shortlist.  With IVF ``centroids`` each query
+    scans only the rows in its ``n_probe`` nearest cells (rounded d2,
+    smallest cell on ties), picked driver-side against the tiny
+    centroid matrix."""
     import numpy as np
     import pandas as pd
 
-    # all-NULL vectors would reach pq_train_codebooks as an empty
-    # pandas frame (np.stack crash) — skip-null convention applies to
-    # the TRAINABLE rows, not mere row count
-    if corpus.filter(F.col(vec_col).isNotNull()).isEmpty():
-        # no trainable corpus -> no codebooks, nothing to retrieve
-        col = "cosine_sim" if rerank_factor > 0 else "approx_sim"
-        return corpus.sparkSession.createDataFrame(
-            [], f"query_id long, rank int, corpus_id long, {col} double")
-    if codebooks is None:
-        codebooks = pq_train_codebooks(corpus, vec_col, m=m, k=kc)
-    m_, kc_, dsub = codebooks.shape
-
+    col = "cosine_sim" if rerank_factor > 0 else "approx_sim"
     qpd = (queries.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("qid"),
                           _as_double(F.col(vec_col)).alias("qv"))
            .toPandas())
-    out_schema = "query_id long, rank int, corpus_id long, approx_sim double"
     if qpd.empty:
-        return corpus.sparkSession.createDataFrame([], out_schema)
+        return corpus.sparkSession.createDataFrame(
+            [], f"query_id long, rank int, corpus_id long, {col} double")
     qids = qpd["qid"].to_numpy()
     Q = np.stack(qpd["qv"].to_numpy()).astype(np.float64)
     qn = np.linalg.norm(Q, axis=1, keepdims=True)
     Qn = Q / np.where(qn == 0, 1.0, qn)
+    m, _, dsub = codebooks.shape
     # LUT[q, j, c] = <q_sub_j, centroid_jc>; sum over j approximates cos
-    lut = np.einsum("qjd,jcd->qjc",
-                    Qn.reshape(len(Qn), m_, dsub), codebooks)
-
-    enc = pq_encode(corpus, id_col, vec_col, codebooks,
-                    portable=portable_encode)
+    lut = np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m, dsub), codebooks)
+    probed = None
+    if centroids is not None:
+        cents = np.asarray(centroids, dtype=np.float64)
+        qd = np.round(((Q[:, None, :] - cents[None, :, :]) ** 2).sum(-1), 6)
+        # stable sort: exact ties of the rounded distance keep index
+        # order, i.e. the smallest cell id wins (the portable tie-break)
+        probed = np.zeros(qd.shape, dtype=bool)
+        np.put_along_axis(probed, np.argsort(qd, axis=1, kind="stable")
+                          [:, :n_probe], True, axis=1)
     # per-batch partial top-k must keep the WIDER rerank shortlist,
     # or batch-level truncation silently caps recall at the raw-PQ@k
     k_scan = k * rerank_factor if rerank_factor > 0 else k
@@ -826,16 +665,15 @@ def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
                 continue
             codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
             ids = pdf["id"].to_numpy()
-            scores = np.zeros((len(qids), len(ids)))
-            for j in range(m_):
-                scores += lut[:, j, codes[:, j]]
-            n_q, n_c = scores.shape
-            out = pd.DataFrame({
-                "query_id": np.repeat(qids, n_c),
-                "corpus_id": np.tile(ids, n_q),
-                "approx_sim": scores.ravel(),
-            })
-            out = out[out.query_id != out.corpus_id]
+            keep = qids[:, None] != ids[None, :]
+            if probed is not None:
+                keep &= probed[:, pdf["cell"].to_numpy()]
+            qi, ci = np.nonzero(keep)
+            s = np.zeros(len(qi))
+            for j in range(m):
+                s += lut[qi, j, codes[ci, j]]
+            out = pd.DataFrame({"query_id": qids[qi], "corpus_id": ids[ci],
+                                "approx_sim": s})
             # cut at the 6-dp OUTPUT precision: ranking by raw floats
             # lets accumulation-order ulps (engine-specific) reorder
             # scores that round to the same value — on near-constant
@@ -847,6 +685,7 @@ def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
                    .groupby("query_id").head(k_scan).drop(columns="__r6"))
             yield out
 
+    enc = pq_encode(corpus, id_col, vec_col, codebooks, centroids=centroids)
     scored = enc.mapInPandas(
         scan, "query_id long, corpus_id long, approx_sim double")
     w = Window.partitionBy("query_id").orderBy(
@@ -888,135 +727,73 @@ def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
                     F.round("cosine_sim", 6).alias("cosine_sim")))
 
 
+def cosine_topk_pq(corpus: DataFrame, queries: DataFrame, id_col: str,
+                   vec_col: str, k: int = 5, m: int = 32, kc: int = 64,
+                   codebooks=None, rerank_factor: int = 0) -> DataFrame:
+    """Approximate top-k via PQ asymmetric distance: queries stay
+    exact (normalized floats), the corpus is scanned as codes; each
+    query precomputes an (m, kc) inner-product lookup table against
+    the codebooks, and a corpus row's score is m table lookups summed
+    — no per-pair arithmetic beyond adds. Same partial-top-k shuffle
+    contract as cosine_topk_gemm (num_batches * n_queries * k rows).
+
+    The codebooks are an input: used as given, or — when None —
+    trained by :func:`pq_train_codebooks` (``m`` x ``kc``).
+
+    ``rerank_factor > 0`` adds the standard PQ refinement: keep the
+    PQ top (rerank_factor * k) per query, fetch EXACT vectors for
+    that shortlist only (a candidate-sized join, not a corpus scan
+    of floats), recompute exact cosine, re-top-k — measured on the
+    fixture: recall@5 0.83 raw -> 0.99+ at rerank_factor=4, while
+    the float corpus is touched for only n_q * rerank_factor * k
+    rows. Recall-vs-exact contract in tests/test_dedup.py."""
+    if codebooks is None:
+        # all-NULL vectors would reach pq_train_codebooks as an empty
+        # pandas frame (np.stack crash) — skip-null convention applies
+        # to the TRAINABLE rows, not mere row count
+        if corpus.filter(F.col(vec_col).isNotNull()).isEmpty():
+            # no trainable corpus -> no codebooks, nothing to retrieve
+            col = "cosine_sim" if rerank_factor > 0 else "approx_sim"
+            return corpus.sparkSession.createDataFrame(
+                [], f"query_id long, rank int, corpus_id long, {col} double")
+        codebooks = pq_train_codebooks(corpus, vec_col, m=m, k=kc)
+    return _pq_search(corpus, queries, id_col, vec_col, codebooks, k,
+                      rerank_factor)
+
+
 def cosine_topk_ivfpq(corpus: DataFrame, queries: DataFrame, id_col: str,
                       vec_col: str, k: int = 5, n_centroids: int = 16,
                       n_probe: int = 4, m: int = 32, kc: int = 64,
-                      rerank_factor: int = 4, seed: int = 42) -> DataFrame:
+                      rerank_factor: int = 4, seed: int = 42,
+                      centroids: list[list[float]] | None = None,
+                      codebooks=None) -> DataFrame:
     """IVF-PQ composition (the FAISS-style production ANN index):
     IVF cells prune WHICH corpus rows are scanned (~n_probe/n_centroids
     of the corpus per query), PQ codes shrink WHAT is scanned (m small
     ints per row instead of the float vector), and the exact rerank of
-    the shortlist restores true cosines. The float corpus is touched
+    the shortlist restores true cosines (``rerank_factor=0`` returns
+    the raw ``approx_sim`` top-k instead). The float corpus is touched
     only for shortlist rows.
 
-    Plan: cell assignment + PQ codes are one narrow pass over the
-    corpus (the index build a daily job checkpoints); per query the
-    probed (query_id, cell) pairs broadcast into an equi-join against
-    the code table; scoring is LUT adds inside mapInPandas with
-    per-batch partial top-k — the same shuffle contract as
-    cosine_topk_gemm/pq."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = corpus.sparkSession
-    # count the null-filtered frame (what KMeans/PQ actually train on),
-    # not the raw corpus — see cosine_topk_ivf's k-clamp note
+    Both quantizers are inputs: ``centroids`` as in
+    :func:`cosine_topk_ivf` (KMeans-trained when None) and
+    ``codebooks`` as in :func:`cosine_topk_pq` (trained when None);
+    with both given as literals the whole composition is
+    value-checkable cross-engine.  Plan: ONE narrow pass computes
+    (id, cell, codes) per corpus row (the index build a daily job
+    checkpoints); query probes are picked driver-side; scoring is LUT
+    adds inside mapInPandas with per-batch partial top-k — the same
+    search plan and shuffle contract as cosine_topk_pq."""
+    # train on the null-filtered frame — see cosine_topk_ivf's note
     corpus = corpus.filter(F.col(vec_col).isNotNull())
-    n_avail = corpus.limit(n_centroids).count()
-    if n_avail == 0 or queries.isEmpty():
-        # empty slice: neither codebooks nor centroids can be trained
-        return spark.createDataFrame(
-            [], "query_id long, rank int, corpus_id long, "
-                "cosine_sim double")
-    n_centroids = min(n_centroids, n_avail)
-    if n_centroids < 2:  # flat-index fallback, same as cosine_topk_ivf
-        return cosine_topk_gemm(corpus, queries, id_col, vec_col, k=k)
-    n_probe = min(n_probe, n_centroids)
-    codebooks = pq_train_codebooks(corpus, vec_col, m=m, k=kc, seed=seed)
-    m_, kc_, dsub = codebooks.shape
-
-    c = corpus.select(F.col(id_col).cast("long").alias("id"),
-                      _as_double(F.col(vec_col)).alias("v"))
-    data = c.withColumn("features", array_to_vector(F.col("v")))
-    model = KMeans(k=n_centroids, seed=seed, featuresCol="features").fit(data)
-    cells = model.transform(data).select(
-        "id", F.col("prediction").alias("cell"))
-    enc = pq_encode(corpus, id_col, vec_col, codebooks).join(cells, "id")
-
-    qpd = (queries.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("qid"),
-                          _as_double(F.col(vec_col)).alias("qv"))
-           .toPandas())
-    out_schema = "query_id long, rank int, corpus_id long, cosine_sim double"
-    if qpd.empty:
-        return spark.createDataFrame([], out_schema)
-    qids = qpd["qid"].to_numpy()
-    Q = np.stack(qpd["qv"].to_numpy()).astype(np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = Q / np.where(qn == 0, 1.0, qn)
-    lut = np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m_, dsub),
-                    codebooks)
-    # probe cells driver-side: centroid matrix is tiny
-    cents = np.array([list(map(float, ct))
-                      for ct in model.clusterCenters()])
-    d2 = ((Q[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-    probe_rows = [(int(qids[i]), int(cell))
-                  for i in range(len(qids))
-                  for cell in np.argsort(d2[i], kind="stable")[:n_probe]]
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell int")
-
-    qrow = {int(q): i for i, q in enumerate(qids)}
-    k_scan = k * rerank_factor if rerank_factor > 0 else k
-
-    def scan(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            qi = pdf["query_id"].map(qrow).to_numpy()
-            s = np.zeros(len(pdf))
-            for j in range(m_):
-                s += lut[qi, j, codes[:, j]]
-            out = pd.DataFrame({"query_id": pdf["query_id"].to_numpy(),
-                                "corpus_id": pdf["id"].to_numpy(),
-                                "approx_sim": s})
-            out = out[out.query_id != out.corpus_id]
-            # cut at the 6-dp OUTPUT precision: ranking by raw floats
-            # lets accumulation-order ulps (engine-specific) reorder
-            # scores that round to the same value — on near-constant
-            # data the ulps ARE the order (r5 degenerate-parity
-            # finding); id-tiebreak at rounded precision is portable
-            out["__r6"] = out["approx_sim"].round(6)
-            out = (out.sort_values(["query_id", "__r6", "corpus_id"],
-                                   ascending=[True, False, True])
-                   .groupby("query_id").head(k_scan).drop(columns="__r6"))
-            yield out
-
-    cand_codes = enc.join(F.broadcast(probes), "cell") \
-        .select("query_id", "id", "codes")
-    scored = cand_codes.mapInPandas(
-        scan, "query_id long, corpus_id long, approx_sim double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("corpus_id"))
-    shortlist = (scored.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k_scan)
-                 .select("query_id", "corpus_id"))
-
-    def exact(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            cn = np.linalg.norm(C, axis=1, keepdims=True)
-            Cn = C / np.where(cn == 0, 1.0, cn)
-            qi = pdf["query_id"].map(qrow).to_numpy()
-            sims = (Cn * Qn[qi]).sum(axis=1)
-            yield pd.DataFrame({"query_id": pdf["query_id"].to_numpy(),
-                                "corpus_id": pdf["corpus_id"].to_numpy(),
-                                "cosine_sim": sims})
-
-    cand = shortlist.join(
-        corpus.filter(F.col(vec_col).isNotNull()).select(F.col(id_col).alias("corpus_id"),
-                      _as_double(F.col(vec_col)).alias("cv")), "corpus_id")
-    rescored = cand.mapInPandas(
-        exact, "query_id long, corpus_id long, cosine_sim double")
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("corpus_id"))
-    return (rescored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "corpus_id",
-                    F.round("cosine_sim", 6).alias("cosine_sim")))
+    if centroids is None:
+        centroids = _kmeans_centroids(corpus, vec_col, n_centroids, seed)
+        if not centroids:  # flat-index fallback, same as cosine_topk_ivf
+            return cosine_topk_gemm(corpus, queries, id_col, vec_col, k=k)
+    if codebooks is None:
+        codebooks = pq_train_codebooks(corpus, vec_col, m=m, k=kc, seed=seed)
+    return _pq_search(corpus, queries, id_col, vec_col, codebooks, k,
+                      rerank_factor, centroids=centroids, n_probe=n_probe)
 
 
 def hybrid_retrieval_topk(docs: DataFrame, emb: DataFrame,

@@ -1227,28 +1227,29 @@ FROM ranked WHERE rank <= {k} ORDER BY query_id, rank
 @register("qx_similarity_topk_ivf_fixed",
           oracle=_ivf_fixed_oracle_sql())
 def qx_similarity_topk_ivf_fixed(spark, sf_dir):
-    """IVF approximate top-5 with a FIXED deterministic coarse
+    """IVF approximate top-5 given a FIXED deterministic coarse
     quantizer (16 LCG unit-vector centroids, n_probe=6) — the
-    pluggable-quantizer IVF form, and therefore the first
     ORACLE-CHECKED row of the IVF family: cell assignment (rounded
     argmin L2, smallest-cell ties), query probing, the (cell)
     candidate equi-join and the exact cosine rerank all replay in
-    DuckDB (_ivf_fixed_oracle_sql).  The KMeans-trained variant
-    (qx_similarity_topk_ivf) stays rows-only with its recall
-    contract — MLlib's fit is engine-specific; the quantizer is the
-    only difference between the two plans."""
+    DuckDB (_ivf_fixed_oracle_sql).  It runs the same
+    similarity.cosine_topk_ivf search as the KMeans-trained
+    qx_similarity_topk_ivf; the quantizer passed in is the only
+    difference (MLlib's fit is engine-specific, so that row stays
+    rows-only with its recall contract)."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
     cents = similarity.hyperplane_planes(64, 16, seed=7)
-    return similarity.cosine_topk_ivf_fixed(
-        emb, queries, "vec_id", "embedding", centroids=cents,
-        k=5, n_probe=6).orderBy("query_id", "rank")
+    return similarity.cosine_topk_ivf(
+        emb, queries, "vec_id", "embedding", k=5, n_probe=6,
+        centroids=cents).orderBy("query_id", "rank")
 
 
 @register("qx_similarity_topk_ivf")
 def qx_similarity_topk_ivf(spark, sf_dir):
-    """IVF-partitioned approximate top-5 (KMeans cells + n_probe=6
-    rerank); rows-only + recall-vs-bruteforce test in
+    """IVF-partitioned approximate top-5 (KMeans-trained cells +
+    n_probe=6 rerank) — qx_similarity_topk_ivf_fixed's search with a
+    trained quantizer; rows-only + recall-vs-bruteforce test in
     tests/test_scale.py."""
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
@@ -1811,14 +1812,15 @@ FROM ranked WHERE rank <= {k} ORDER BY query_id, rank
 @register("qx_similarity_topk_pq_fixed",
           oracle=_pq_fixed_oracle_sql())
 def qx_similarity_topk_pq_fixed(spark, sf_dir):
-    """PQ asymmetric-distance top-5 with FIXED deterministic codebooks
-    (8 sub-spaces x 16 LCG entries) and the portable rounded-argmin
-    encode — the first ORACLE-CHECKED row of the PQ family: vector
-    normalization, per-sub-space code assignment, the LUT scan's
-    sum-of-sub-dot scores and the top-k rerank all replay in DuckDB
+    """PQ asymmetric-distance top-5 given FIXED deterministic
+    codebooks (8 sub-spaces x 16 LCG entries) — the ORACLE-CHECKED
+    row of the PQ family: vector normalization, the rounded-argmin
+    per-sub-space code assignment, the LUT scan's sum-of-sub-dot
+    scores and the top-k rerank all replay in DuckDB
     (_pq_fixed_oracle_sql).  The k-means-trained variant
-    (qx_similarity_topk_pq) stays rows-only with its recall contract —
-    the codebook trainer is the only difference."""
+    (qx_similarity_topk_pq) runs the same search and stays rows-only
+    with its recall contract — the codebooks passed in are the only
+    difference."""
     import numpy as np
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
@@ -1826,8 +1828,7 @@ def qx_similarity_topk_pq_fixed(spark, sf_dir):
         .reshape(8, 16, 8)
     return similarity.cosine_topk_pq(
         emb, queries, "vec_id", "embedding", k=5, m=8, kc=16,
-        codebooks=cb, rerank_factor=0, portable_encode=True
-    ).orderBy("query_id", "rank")
+        codebooks=cb, rerank_factor=0).orderBy("query_id", "rank")
 
 
 @register("qx_similarity_topk_pq")
@@ -2013,24 +2014,26 @@ FROM ranked WHERE rank <= {k} ORDER BY query_id, rank
 @register("qx_similarity_topk_ivfpq_fixed",
           oracle=_ivfpq_fixed_oracle_sql())
 def qx_similarity_topk_ivfpq_fixed(spark, sf_dir):
-    """The COMPOSED fixed IVF-PQ (FAISS-style production index shape,
-    deterministic quantizers): 16 LCG centroids prune WHICH corpus
-    rows each query scans (n_probe=6), 8x16 LCG codebooks shrink WHAT
-    is scanned to 8 small ints/row, LUT adds score the candidates —
-    and with both quantizers inlined as literals the ENTIRE
-    composition replays in DuckDB.  Completes the ANN oracle ladder:
-    GEMM / LSH / IVF / PQ / IVF-PQ each have a value-hash-checked
-    row; only the k-means TRAINERS remain rows-only (engine-specific
-    fits, recall-contracted)."""
+    """The COMPOSED IVF-PQ (FAISS-style production index shape) given
+    FIXED deterministic quantizers: 16 LCG centroids prune WHICH
+    corpus rows each query scans (n_probe=6), 8x16 LCG codebooks
+    shrink WHAT is scanned to 8 small ints/row, LUT adds score the
+    candidates (no rerank) — and with both quantizers passed as
+    literals the ENTIRE composition replays in DuckDB.  Completes the
+    ANN oracle ladder: GEMM / LSH / IVF / PQ / IVF-PQ each have a
+    value-hash-checked row, and every trained row runs the same
+    search code; only the k-means TRAINERS remain rows-only
+    (engine-specific fits, recall-contracted)."""
     import numpy as np
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
     cents = similarity.hyperplane_planes(64, 16, seed=7)
     cb = np.array(similarity.hyperplane_planes(8, 128, seed=11)) \
         .reshape(8, 16, 8)
-    return similarity.cosine_topk_ivfpq_fixed(
-        emb, queries, "vec_id", "embedding", centroids=cents,
-        codebooks=cb, k=5, n_probe=6).orderBy("query_id", "rank")
+    return similarity.cosine_topk_ivfpq(
+        emb, queries, "vec_id", "embedding", k=5, n_probe=6,
+        rerank_factor=0, centroids=cents, codebooks=cb
+    ).orderBy("query_id", "rank")
 
 
 @register("qx_similarity_topk_ivfpq")
@@ -2038,7 +2041,8 @@ def qx_similarity_topk_ivfpq(spark, sf_dir):
     """IVF-PQ ANN (the FAISS-style composition): KMeans cells prune
     WHICH rows are scanned (n_probe=6 of 16), PQ codes shrink WHAT is
     scanned (m=32 small ints per row), exact rerank restores true
-    cosines for the shortlist only. Rows-only (model-derived);
+    cosines for the shortlist only. Rows-only (model-derived
+    quantizers; the search is qx_similarity_topk_ivfpq_fixed's);
     tests/test_dedup.py pins recall >= 0.7 vs brute force and
     true-cosine scores — recall is bounded by the IVF probe set (the
     PQ layer loses nothing after rerank; measured equal to IVF-only

@@ -153,31 +153,3 @@ def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     alternative where the downstream warehouse is Hive/Trino-first;
     same predicate-pushdown + column-pruning behaviour as parquet."""
     df.write.mode(mode).orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def write_xml(df: DataFrame, path: str, row_tag: str = "row",
-              root_tag: str = "rows", mode: str = "overwrite") -> None:
-    """XML sink (built into Spark since 4.0 — no spark-xml dependency):
-    the interchange format for feed-style exports (sitemaps, RSS-like
-    syndication, legacy B2B pipelines).  Row-per-``row_tag`` element;
-    nested structs become nested elements."""
-    (df.write.mode(mode).format("xml")
-     .option("rootTag", root_tag).option("rowTag", row_tag).save(path))
-
-
-def read_xml(spark: SparkSession, path: str, row_tag: str = "row",
-             schema=None) -> DataFrame:
-    """XML source: one DataFrame row per ``row_tag`` element.  Pass an
-    explicit ``schema`` in production — inference reads the data twice
-    and, at 100 TB, schema drift should fail loudly at the contract,
-    not silently widen a column (same policy as the JSONL reader).
-    Attributes surface as ``_attr`` columns, element text of mixed
-    nodes as ``_VALUE``."""
-    r = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.load(path)

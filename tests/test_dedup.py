@@ -548,6 +548,47 @@ def test_ann_ladder_survives_null_dominated_corpus(spark):
         assert fn(all_null, queries, "vec_id", "embedding", k=3).count() == 0
 
 
+def test_ann_trained_quantizer_is_the_only_difference(emb):
+    """An IVF / IVF-PQ index that trains its own quantizers returns
+    exactly the rows of the same index GIVEN those trained quantizers:
+    training is a front end, the search code is one path."""
+    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    trainable = emb.filter(F.col("embedding").isNotNull())
+    cents = similarity._kmeans_centroids(trainable, "embedding", 16, 42)
+    cb = similarity.pq_train_codebooks(trainable, "embedding", m=8, k=16,
+                                       seed=42)
+    assert len(cents) == 16
+    trained = similarity.cosine_topk_ivf(
+        emb, queries, "vec_id", "embedding", k=5, n_centroids=16,
+        n_probe=6).collect()
+    given = similarity.cosine_topk_ivf(
+        emb, queries, "vec_id", "embedding", k=5, n_probe=6,
+        centroids=cents).collect()
+    assert trained and sorted(trained) == sorted(given)
+    trained = similarity.cosine_topk_ivfpq(
+        emb, queries, "vec_id", "embedding", k=5, n_centroids=16,
+        n_probe=6, m=8, kc=16).collect()
+    given = similarity.cosine_topk_ivfpq(
+        emb, queries, "vec_id", "embedding", k=5, n_probe=6,
+        centroids=cents, codebooks=cb).collect()
+    assert trained and sorted(trained) == sorted(given)
+
+
+@pytest.mark.parametrize("name", ["qx_similarity_topk_ivf",
+                                  "qx_similarity_topk_pq",
+                                  "qx_similarity_topk_ivfpq"])
+def test_trained_ann_queries_are_deterministic(spark, sf_dir, name):
+    """Oracle-free smoke for the trained ANN rows: two runs of the
+    registered query return the same non-empty sorted rows (seeded
+    KMeans / codebook training, deterministic search)."""
+    import social_media_ai_engineering_etl_spark.queries  # noqa: F401
+    from social_media_ai_engineering_etl_spark.registry import QUERIES
+
+    first = sorted(QUERIES[name](spark, sf_dir).collect())
+    assert first
+    assert sorted(QUERIES[name](spark, sf_dir).collect()) == first
+
+
 def test_semantic_contamination_blocked_path_matches_broadcast(spark):
     """The large-benchmark blocked-GEMM path (forced via
     max_broadcast_rows=0) returns exactly the broadcast path's
@@ -640,17 +681,17 @@ def test_fixed_quantizer_ann_recall_floors(spark, sf_dir):
     cents = similarity.hyperplane_planes(64, 16, seed=7)
     cb = np.array(similarity.hyperplane_planes(8, 128, seed=11)) \
         .reshape(8, 16, 8)
-    assert recall(similarity.cosine_topk_ivf_fixed(
+    assert recall(similarity.cosine_topk_ivf(
         emb, queries, "vec_id", "embedding", centroids=cents,
         k=5, n_probe=6).collect()) >= 0.5
     raw = recall(similarity.cosine_topk_pq(
         emb, queries, "vec_id", "embedding", k=5, m=8, kc=16,
-        codebooks=cb, rerank_factor=0, portable_encode=True).collect())
+        codebooks=cb, rerank_factor=0).collect())
     rr = recall(similarity.cosine_topk_pq(
         emb, queries, "vec_id", "embedding", k=5, m=8, kc=16,
-        codebooks=cb, rerank_factor=4, portable_encode=True).collect())
+        codebooks=cb, rerank_factor=4).collect())
     assert raw >= 0.15
     assert rr > raw, "exact rerank must recover recall over raw PQ"
-    assert recall(similarity.cosine_topk_ivfpq_fixed(
+    assert recall(similarity.cosine_topk_ivfpq(
         emb, queries, "vec_id", "embedding", centroids=cents,
-        codebooks=cb, k=5, n_probe=6).collect()) >= 0.1
+        codebooks=cb, k=5, n_probe=6, rerank_factor=0).collect()) >= 0.1

@@ -353,46 +353,16 @@ def test_orc_roundtrip_pushdown(spark, sf_dir, tmp_path):
     """ORC sink/scan: exact roundtrip and filter pushdown reaching the
     ORC reader (same contract the parquet path asserts)."""
     import os
-    from social_media_ai_engineering_etl_spark.sources.io import (
-        read_orc, write_orc)
+    from social_media_ai_engineering_etl_spark.sources.io import write_orc
     docs = spark.read.parquet(
         os.path.join(sf_dir, "documents.parquet")).select(
         "doc_id", "lang", "n_chars")
     out = str(tmp_path / "docs_orc")
     write_orc(docs, out)
-    back = read_orc(spark, out)
+    back = spark.read.orc(out)
     assert sorted(map(tuple, back.collect())) == \
         sorted(map(tuple, docs.collect()))
     plan = back.filter(F.col("lang") == "en") \
         ._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]" in plan \
         or "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)" in plan, plan
-
-
-def test_xml_roundtrip_nested_and_explicit_schema(spark, sf_dir, tmp_path):
-    """XML sink/source (built-in since Spark 4): exact roundtrip of a
-    frame with a nested struct; the explicit-schema read path (the
-    production contract — no double-scan inference) agrees with the
-    inferred one."""
-    import os
-
-    from social_media_ai_engineering_etl_spark.sources.io import (
-        read_xml, write_xml)
-    docs = (spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet"))
-        .select("doc_id", "lang",
-                F.struct(F.col("n_chars").alias("chars"),
-                         F.col("source").alias("src")).alias("meta"))
-        .limit(50))
-    out = str(tmp_path / "docs_xml")
-    write_xml(docs, out, row_tag="doc", root_tag="docs")
-    inferred = read_xml(spark, out, row_tag="doc")
-    flat = lambda df: sorted(  # noqa: E731
-        (r["doc_id"], r["lang"], r["meta"]["chars"], r["meta"]["src"])
-        for r in df.collect())
-    assert flat(inferred) == flat(docs)
-    explicit = read_xml(spark, out, row_tag="doc", schema=docs.schema)
-    assert flat(explicit) == flat(docs)
-    # the XML reader marks all fields nullable; names/types must match
-    assert [(f.name, f.dataType) for f in explicit.schema.fields] == \
-        [(f.name, f.dataType) for f in docs.schema.fields]
