@@ -131,28 +131,62 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
             .select("id1", "id2", F.round("jaccard_sim", 6).alias("jaccard_sim")))
 
 
+def _shared_token_counts(sets: DataFrame,
+                         max_df: int | None = None) -> DataFrame:
+    """The count-based inverted index shared by the Jaccard,
+    containment and winnowing pair paths: (id, sh) distinct-token
+    arrays -> (id1, id2, inter, sz1, sz2) for every pair sharing at
+    least one token (id1 < id2).
+
+    Explode the tokens, self-join on token equality (only docs that
+    actually share a token ever meet), then ``groupBy(id1, id2)
+    .count()`` IS the intersection size.  Plan shape: one shuffle on
+    the token + one map-side-combinable shuffle on the pair key + two
+    equi-joins against the tiny (id, size) table (auto-broadcast /
+    AQE).  Docs with no tokens are dropped up front.
+
+    Skew: a token appearing in m docs yields C(m, 2) pair rows.
+    ``max_df`` drops tokens with document frequency > max_df from pair
+    generation (stopword-token guard); this UNDER-counts
+    intersections for pairs relying on those tokens — leave None for
+    exactness, set it at web scale where boilerplate tokens would
+    otherwise dominate the shuffle."""
+    # the token table feeds sizes (x2 joins), the explode, and both
+    # sides of the self-join — persist or the set builder (regex split
+    # + n-way zip + distinct, or gram hashing + winnowing) recomputes
+    # per branch (no DAG CSE; measured 15.3s -> 9.5s at 16x sf0.1)
+    sets = (sets.withColumn("sz", F.size("sh")).filter(F.col("sz") > 0)
+            .persist())
+    sizes = sets.select("id", "sz")
+    tok = sets.select("id", F.explode("sh").alias("s"))
+    if max_df is not None:
+        dfreq = tok.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+        tok = tok.join(dfreq.filter(F.col("df") <= max_df), "s", "leftsemi")
+    inter = (tok.alias("a")
+             .join(tok.alias("b"),
+                   (F.col("a.s") == F.col("b.s"))
+                   & (F.col("a.id") < F.col("b.id")))
+             .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
+             .agg(F.count(F.lit(1)).alias("inter")))
+    return (inter
+            .join(sizes.select(F.col("id").alias("id1"),
+                               F.col("sz").alias("sz1")), "id1")
+            .join(sizes.select(F.col("id").alias("id2"),
+                               F.col("sz").alias("sz2")), "id2"))
+
+
 def ngram_jaccard_pairs_inverted(df: DataFrame, id_col: str, text_col: str,
                                  n: int = 3, threshold: float = 0.2,
                                  max_df: int | None = None) -> DataFrame:
     """EXACT n-gram Jaccard pairs (>= threshold) without the O(n^2)
     cross join — the scale path for exact near-dup mining.
 
-    Count-based inverted index: explode distinct shingles, self-join
-    on shingle equality (only docs that actually share a shingle ever
-    meet), then ``groupBy(id1, id2).count()`` IS the intersection
-    size, so Jaccard = cnt / (sz1 + sz2 - cnt) arithmetically — no
-    array materialization, no verify pass. Plan shape: one shuffle on
-    shingle + one map-side-combinable shuffle on the pair key + two
-    equi-joins against the tiny (id, size) table (auto-broadcast /
-    AQE). Pairs sharing zero shingles (J = 0 < threshold) are never
-    generated.
-
-    Skew: a shingle appearing in m docs yields C(m, 2) pair rows.
-    ``max_df`` drops shingles with document frequency > max_df from
-    pair generation (stopword-shingle guard); this UNDER-counts
-    intersections for pairs relying on those shingles — leave None
-    for exactness, set it at web scale where boilerplate shingles
-    would otherwise dominate the shuffle.
+    Count-based inverted index (:func:`_shared_token_counts`) over
+    distinct shingles: the per-pair count IS the intersection size, so
+    Jaccard = cnt / (sz1 + sz2 - cnt) arithmetically — no array
+    materialization, no verify pass.  Pairs sharing zero shingles
+    (J = 0 < threshold) are never generated.  ``max_df`` is the
+    counter's stopword-shingle skew guard.
 
     The inverted index shuffles xxhash64(shingle) longs, not shingle
     strings: ~3x fewer shuffle bytes (8 vs ~25/shingle) and long-key
@@ -162,33 +196,12 @@ def ngram_jaccard_pairs_inverted(df: DataFrame, id_col: str, text_col: str,
     pair — below any practical noise floor; the oracle-checked pair
     set is byte-identical on the fixtures).
     """
-    sh = df.select(F.col(id_col).alias("id"),
-                   shingle_col(text_col, n, hashed=True).alias("sh"))
-    # the shingle table feeds sizes (x2 joins), the explode, and both
-    # sides of the self-join — persist or the shingling (regex split +
-    # n-way zip + distinct) recomputes per branch (no DAG CSE; the
-    # minhash/winnow lesson — measured 15.3s -> 9.5s at 16x sf0.1)
-    sh = (sh.withColumn("sz", F.size("sh")).filter(F.col("sz") > 0)
-          .persist())
-    sizes = sh.select("id", "sz")
-    tok = sh.select("id", F.explode("sh").alias("s"))
-    if max_df is not None:
-        dfreq = tok.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-        tok = (tok.join(dfreq.filter(F.col("df") <= max_df), "s", "leftsemi"))
-    inter = (tok.alias("a")
-             .join(tok.alias("b"),
-                   (F.col("a.s") == F.col("b.s"))
-                   & (F.col("a.id") < F.col("b.id")))
-             .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-             .agg(F.count(F.lit(1)).alias("inter")))
-    res = (inter
-           .join(sizes.select(F.col("id").alias("id1"),
-                              F.col("sz").alias("sz1")), "id1")
-           .join(sizes.select(F.col("id").alias("id2"),
-                              F.col("sz").alias("sz2")), "id2")
-           .withColumn("jaccard_sim",
-                       F.col("inter").cast("double")
-                       / (F.col("sz1") + F.col("sz2") - F.col("inter"))))
+    sets = df.select(F.col(id_col).alias("id"),
+                     shingle_col(text_col, n, hashed=True).alias("sh"))
+    res = _shared_token_counts(sets, max_df).withColumn(
+        "jaccard_sim",
+        F.col("inter").cast("double")
+        / (F.col("sz1") + F.col("sz2") - F.col("inter")))
     return (res.filter(F.col("jaccard_sim") >= threshold)
             .select("id1", "id2", F.round("jaccard_sim", 6).alias("jaccard_sim")))
 
@@ -317,8 +330,7 @@ def ngram_jaccard_pairs_prefix(df: DataFrame, id_col: str, text_col: str,
 
 
 def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
-                            n: int = 3, threshold: float = 0.6,
-                            max_df: int | None = None) -> DataFrame:
+                            n: int = 3, threshold: float = 0.6) -> DataFrame:
     """EXACT n-gram CONTAINMENT pairs: |A∩B| / min(|A|, |B|) >= t —
     the asymmetric companion to :func:`ngram_jaccard_pairs_inverted`.
 
@@ -331,36 +343,16 @@ def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
     corpora (the near-dup literature calls this the containment /
     overlap coefficient).
 
-    Plan shape is identical to the inverted-index Jaccard path (one
-    shingle-hash shuffle, one pair-count shuffle, two broadcast size
-    joins) because the scoring difference is pure arithmetic on the
-    same (inter, sz1, sz2) triple — at 100 TB both run off one shared
-    candidate pass.  Same ``max_df`` stopword-shingle skew guard.
+    Same hashed shingle sets and the same inverted-index counter
+    (:func:`_shared_token_counts`) as the Jaccard path: the scoring
+    difference is pure arithmetic on the same (inter, sz1, sz2)
+    triple — at 100 TB both run off one shared candidate pass.
     """
-    sh = df.select(F.col(id_col).alias("id"),
-                   shingle_col(text_col, n).alias("sh"))
-    sh = (sh.withColumn("sz", F.size("sh")).filter(F.col("sz") > 0)
-          .persist())
-    sizes = sh.select("id", "sz")
-    tok = sh.select("id", F.explode(
-        F.transform("sh", lambda s: F.xxhash64(s))).alias("s"))
-    if max_df is not None:
-        dfreq = tok.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-        tok = tok.join(dfreq.filter(F.col("df") <= max_df), "s", "leftsemi")
-    inter = (tok.alias("a")
-             .join(tok.alias("b"),
-                   (F.col("a.s") == F.col("b.s"))
-                   & (F.col("a.id") < F.col("b.id")))
-             .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-             .agg(F.count(F.lit(1)).alias("inter")))
-    res = (inter
-           .join(sizes.select(F.col("id").alias("id1"),
-                              F.col("sz").alias("sz1")), "id1")
-           .join(sizes.select(F.col("id").alias("id2"),
-                              F.col("sz").alias("sz2")), "id2")
-           .withColumn("containment",
-                       F.col("inter").cast("double")
-                       / F.least("sz1", "sz2")))
+    sets = df.select(F.col(id_col).alias("id"),
+                     shingle_col(text_col, n, hashed=True).alias("sh"))
+    res = _shared_token_counts(sets).withColumn(
+        "containment",
+        F.col("inter").cast("double") / F.least("sz1", "sz2"))
     return (res.filter(F.col("containment") >= threshold)
             .select("id1", "id2", "inter",
                     F.round("containment", 6).alias("containment")))
@@ -501,40 +493,36 @@ def banded_rows(sig: DataFrame, num_hashes: int, bands: int,
             .select("id", *extra, "bb.band", "bb.bucket"))
 
 
-def _lsh_candidates_from_sig(sig: DataFrame, num_hashes: int,
-                             bands: int,
-                             max_bucket: int | None = None) -> DataFrame:
-    """Banded bucket join over a precomputed (id, sig) table.
-
-    ``max_bucket`` is the HOT-BUCKET guard (r5 skew probe): a cluster
-    of m near-identical documents maps to ONE bucket in EVERY band,
-    so candidate generation emits ~bands * C(m,2) join rows before
-    the cross-band distinct — cost that grows with the square of the
-    largest duplicate cluster, not the corpus.  With ``max_bucket``
-    set, buckets wider than it are dropped from pair generation (one
-    cheap count per (band, bucket), same move as the inverted index's
-    max_df): a true near-dup cluster still pairs through its OTHER
-    bands unless it exceeds max_bucket in ALL of them, at which point
-    the honest production answer is handling the pathological cluster
-    out of band (it is, by construction, a single boilerplate
-    template).  None (default) keeps the exact candidate semantics.
-    """
-    return _candidates_from_banded(banded_rows(sig, num_hashes, bands),
-                                   max_bucket)
+# Measured crossover for the hot-bucket guard (SCALING.md §r5.3):
+# below this bucket width the guard's extra (band, bucket) count pass
+# costs more than it saves (50-doc cluster: 1.04 s as-is vs 1.35 s
+# guarded); above it the candidate blowup is quadratic in cluster
+# width (800-doc cluster: 21.1 s as-is vs 3.3 s guarded, 6.4x).
+LSH_GUARD_CROSSOVER = 256
 
 
-def _candidates_from_banded(banded: DataFrame,
-                            max_bucket: int | None = None) -> DataFrame:
-    """The join half of :func:`_lsh_candidates_from_sig`, split out so
-    callers that already hold (and persist) a banded table — the auto
-    variant profiles it first — don't re-band."""
-    if max_bucket is not None:
-        width = (banded.groupBy("band", "bucket")
-                 .agg(F.count(F.lit(1)).alias("__w")))
-        banded = (banded.join(width.filter(F.col("__w") <= max_bucket),
-                              ["band", "bucket"], "leftsemi"))
-    a = banded.alias("a")
-    b = banded.alias("b")
+def _guard_banded_width(banded: DataFrame, max_bucket: int) -> DataFrame:
+    """The IN-PLAN hot-bucket guard: a ``count() over (partition by
+    band, bucket)`` window annotates each banded row with its bucket
+    width and rows in buckets wider than ``max_bucket`` are dropped —
+    no driver-blocking profile action.  The count+leftsemi form of
+    the same filter measured slower (4.7 s mean vs 2.5 s min-of-5 on
+    qx_dedup_minhash at sf0.1): it re-exchanges the banded table.
+    At scale the width window rides one hash exchange of the narrow
+    (id, band, bucket) table and AQE still skew-splits the downstream
+    joins."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("band", "bucket")
+    return (banded.withColumn("__w", F.count(F.lit(1)).over(w))
+            .filter(F.col("__w") <= max_bucket).drop("__w"))
+
+
+def _pairs_from_bucketed(rel: DataFrame) -> DataFrame:
+    """In-bucket candidate self-join over any (id, band, bucket)
+    relation (id1 < id2, distinct across bands)."""
+    a = rel.alias("a")
+    b = rel.alias("b")
     return (a.join(b, (F.col("a.band") == F.col("b.band"))
                    & (F.col("a.bucket") == F.col("b.bucket"))
                    & (F.col("a.id") < F.col("b.id")))
@@ -576,7 +564,22 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
         F.col(id_col).alias("id"),
         minhash_signature_arrow(word_shingles(F.col(text_col), n),
                                 num_hashes).alias("sig"))
-    return _lsh_candidates_from_sig(sig, num_hashes, bands)
+    return _pairs_from_bucketed(banded_rows(sig, num_hashes, bands))
+
+
+def _verify_jaccard(cands: DataFrame, sh: DataFrame,
+                    threshold: float) -> DataFrame:
+    """Exact-Jaccard verify of (id1, id2) candidates against an
+    (id, sh) shingle table: two equi-joins fetch each side's set, keep
+    pairs with Jaccard >= threshold (rounded to 6 dp)."""
+    joined = (cands
+              .join(sh.select(F.col("id").alias("id1"),
+                              F.col("sh").alias("sh1")), "id1")
+              .join(sh.select(F.col("id").alias("id2"),
+                              F.col("sh").alias("sh2")), "id2"))
+    return (joined.withColumn("jaccard_sim", jaccard(F.col("sh1"), F.col("sh2")))
+            .filter(F.col("jaccard_sim") >= threshold)
+            .select("id1", "id2", F.round("jaccard_sim", 6).alias("jaccard_sim")))
 
 
 def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -591,116 +594,38 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     expensive shingling expression — measured ~3x slower cold at
     sf0.1. At 100 TB this persisted (id, shingles) table is the same
     artifact a production MinHash pipeline would checkpoint before
-    banding.  ``max_bucket`` passes through to the hot-bucket guard
-    (see :func:`_lsh_candidates_from_sig`)."""
+    banding.
+
+    ``max_bucket`` is the HOT-BUCKET guard (r5 skew probe): a cluster
+    of m near-identical documents maps to ONE bucket in EVERY band,
+    so candidate generation emits ~bands * C(m,2) join rows before
+    the cross-band distinct — cost that grows with the square of the
+    largest duplicate cluster, not the corpus.  With ``max_bucket``
+    set, buckets wider than it are dropped from pair generation by an
+    in-plan width window (:func:`_guard_banded_width`, the same move
+    as the inverted index's max_df): a true near-dup cluster still
+    pairs through its OTHER bands unless it exceeds max_bucket in ALL
+    of them, at which point the honest production answer is handling
+    the pathological cluster out of band (it is, by construction, a
+    single boilerplate template).  The filter is vacuous when no
+    bucket is wider than ``max_bucket``, so the pair set then equals
+    the unguarded one.  None (default) keeps the exact candidate
+    semantics; :data:`LSH_GUARD_CROSSOVER` is the measured setting."""
     sh = df.select(F.col(id_col).alias("id"),
                    shingle_col(text_col, n).alias("sh")).persist()
     sig = sh.select("id", _sig_col(num_hashes, base_hash).alias("sig"))
-    # persist the banded table: BOTH sides of the candidate self-join
-    # read it, so without materialization the explode + 32-slice
-    # xxhash64 banding (and the signature map above it) runs twice —
-    # measured ~0.5 s of the plain path's 2.8 s at sf0.1 (r7)
-    banded = banded_rows(sig, num_hashes, bands).persist()
-    cands = _candidates_from_banded(banded, max_bucket=max_bucket)
-    joined = (cands
-              .join(sh.select(F.col("id").alias("id1"),
-                              F.col("sh").alias("sh1")), "id1")
-              .join(sh.select(F.col("id").alias("id2"),
-                              F.col("sh").alias("sh2")), "id2"))
-    return (joined.withColumn("jaccard_sim", jaccard(F.col("sh1"), F.col("sh2")))
-            .filter(F.col("jaccard_sim") >= threshold)
-            .select("id1", "id2", F.round("jaccard_sim", 6).alias("jaccard_sim")))
-
-
-# Measured crossover for the hot-bucket guard (SCALING.md §r5.3):
-# below this bucket width the guard's extra (band, bucket) count pass
-# costs more than it saves (50-doc cluster: 1.04 s as-is vs 1.35 s
-# guarded); above it the candidate blowup is quadratic in cluster
-# width (800-doc cluster: 21.1 s as-is vs 3.3 s guarded, 6.4x).
-LSH_GUARD_CROSSOVER = 256
-
-
-def _guard_banded_width(banded: DataFrame, max_bucket: int) -> DataFrame:
-    """The IN-PLAN hot-bucket guard: a ``count() over (partition by
-    band, bucket)`` window annotates each banded row with its bucket
-    width and rows in buckets wider than ``max_bucket`` are dropped —
-    no driver-blocking profile action.
-
-    r8 (optimization round): this replaces the measure->decide
-    pre-pass of the old auto path.  The two are RESULT-IDENTICAL for
-    any input: when no bucket exceeds ``max_bucket`` the width filter
-    drops nothing (exactly the profile's guard-off branch), and when
-    some bucket does, both drop precisely the buckets wider than the
-    crossover.  Folding the guard into the single DAG removed the
-    profile's collect() job and its early double materialization —
-    measured 3.4 s -> 2.5 s (min-of-5) on qx_dedup_minhash at sf0.1;
-    the count+leftsemi form of the same filter was SLOWER than the
-    pre-pass (4.7 s mean: it re-exchanges the banded table), which is
-    why the window form is the one that ships.  At scale the width
-    window rides one hash exchange of the narrow (id, band, bucket)
-    table and AQE still skew-splits the downstream joins."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "bucket")
-    return (banded.withColumn("__w", F.count(F.lit(1)).over(w))
-            .filter(F.col("__w") <= max_bucket).drop("__w"))
-
-
-def _pairs_from_bucketed(rel: DataFrame) -> DataFrame:
-    """In-bucket candidate self-join over any (id, band, bucket)
-    relation (id1 < id2, distinct across bands)."""
-    a = rel.alias("a")
-    b = rel.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.id") < F.col("b.id")))
-             .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-             .distinct())
-
-
-def minhash_dedup_pairs_auto(df: DataFrame, id_col: str, text_col: str,
-                             n: int = 3, num_hashes: int = 128,
-                             bands: int = 32, threshold: float = 0.8,
-                             base_hash=None,
-                             crossover: int = LSH_GUARD_CROSSOVER
-                             ) -> DataFrame:
-    """:func:`minhash_dedup_pairs` with the hot-bucket guard applied
-    STRUCTURALLY (r8): buckets wider than ``crossover`` are excluded
-    from pair generation by an in-plan width window — provably the
-    same pair set as the old measure->decide pre-pass (the filter is
-    vacuous exactly when the old profile chose guard-off; see
-    :func:`_guard_banded_width`), with zero extra driver
-    actions.  The policy + crossover are stamped into the result
-    schema's column metadata under ``lsh_guard`` so the evidence
-    travels with the plan and any parquet the caller writes."""
-    sh = df.select(F.col(id_col).alias("id"),
-                   shingle_col(text_col, n).alias("sh")).persist()
-    sig = sh.select("id", _sig_col(num_hashes, base_hash).alias("sig"))
-    # persist the GUARDED (width-windowed) banded relation, not the
-    # raw banded table (VERDICT r8 ask #3): both self-join sides read
-    # it, so persisting below the window made each side re-run the
-    # width Window + Filter (2x the window's exchange+sort — two
-    # Window nodes in the r8 plan).  Persisting above it computes
-    # banding + width window ONCE; the join sides read the cached,
-    # already-(band, bucket)-partitioned rows.
-    guarded = _guard_banded_width(
-        banded_rows(sig, num_hashes, bands), crossover).persist()
-    cands = _pairs_from_bucketed(guarded)
-    joined = (cands
-              .join(sh.select(F.col("id").alias("id1"),
-                              F.col("sh").alias("sh1")), "id1")
-              .join(sh.select(F.col("id").alias("id2"),
-                              F.col("sh").alias("sh2")), "id2"))
-    meta = {"policy": "structural-width-filter", "max_bucket": crossover,
-            "crossover": crossover,
-            "reason": (f"in-plan guard: buckets wider than {crossover} "
-                       "excluded from pair generation (vacuous below "
-                       "the crossover — identical to measure->decide)")}
-    return (joined.withColumn("jaccard_sim",
-                              jaccard(F.col("sh1"), F.col("sh2")))
-            .filter(F.col("jaccard_sim") >= threshold)
-            .select(F.col("id1").alias("id1", metadata={"lsh_guard": meta}),
-                    "id2", F.round("jaccard_sim", 6).alias("jaccard_sim")))
+    banded = banded_rows(sig, num_hashes, bands)
+    if max_bucket is not None:
+        banded = _guard_banded_width(banded, max_bucket)
+    # persist the (guarded) banded relation: BOTH sides of the
+    # candidate self-join read it, so without materialization the
+    # explode + 32-slice xxhash64 banding (and the signature map above
+    # it) runs twice — measured ~0.5 s of the plain path's 2.8 s at
+    # sf0.1 (r7).  Persisting ABOVE the width window computes it once
+    # (VERDICT r8 ask #3: below it, each join side re-ran the window's
+    # exchange+sort).
+    cands = _pairs_from_bucketed(banded.persist())
+    return _verify_jaccard(cands, sh, threshold)
 
 
 def minhash_artifact(df: DataFrame, id_col: str, text_col: str,
@@ -756,7 +681,6 @@ def incremental_minhash_dedup(corpus: DataFrame, new_docs: DataFrame,
     n_art = minhash_artifact(new_docs, id_col, text_col, n,
                              num_hashes, base_hash=base_hash).persist()
     art = c_art.unionByName(n_art).persist()
-    sh = art.select("id", "sh")
     banded = banded_rows(art.select("id", "sig"), num_hashes, bands)
     new_banded = banded_rows(n_art.select("id", "sig"), num_hashes, bands)
     cands = (banded.alias("a")
@@ -767,16 +691,7 @@ def incremental_minhash_dedup(corpus: DataFrame, new_docs: DataFrame,
              .select(F.least("a.id", "b.id").alias("id1"),
                      F.greatest("a.id", "b.id").alias("id2"))
              .distinct())
-    joined = (cands
-              .join(sh.select(F.col("id").alias("id1"),
-                              F.col("sh").alias("sh1")), "id1")
-              .join(sh.select(F.col("id").alias("id2"),
-                              F.col("sh").alias("sh2")), "id2"))
-    return (joined.withColumn("jaccard_sim",
-                              jaccard(F.col("sh1"), F.col("sh2")))
-            .filter(F.col("jaccard_sim") >= threshold)
-            .select("id1", "id2",
-                    F.round("jaccard_sim", 6).alias("jaccard_sim")))
+    return _verify_jaccard(cands, art, threshold)
 
 
 def minhash_agreement_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -796,7 +711,7 @@ def minhash_agreement_pairs(df: DataFrame, id_col: str, text_col: str,
                     minhash_signature_arrow(
                         word_shingles(F.col(text_col), n),
                         num_hashes, **kw).alias("sig")).persist()
-    cands = _lsh_candidates_from_sig(sig, num_hashes, bands)
+    cands = _pairs_from_bucketed(banded_rows(sig, num_hashes, bands))
     joined = (cands
               .join(sig.select(F.col("id").alias("id1"),
                                F.col("sig").alias("s1")), "id1")
@@ -1142,19 +1057,16 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     short document is embedded in a longer one; that asymmetry is the
     point of local fingerprints.
 
-    Plan shape mirrors the inverted n-gram path: explode fingerprints,
-    equi-join on the fingerprint value (only docs sharing a
-    fingerprint ever meet — winnowing guarantees any shared run of
-    >= w + k - 1 words produces one), count per pair, broadcast-join
-    the tiny (id, n_fp) table. One shuffle on fingerprint + one on
-    the pair key; no cross product anywhere.
+    Plan shape is the inverted n-gram path's
+    (:func:`_shared_token_counts` over the fingerprint sets): only
+    docs sharing a fingerprint ever meet — winnowing guarantees any
+    shared run of >= w + k - 1 words produces one.  One shuffle on
+    fingerprint + one on the pair key; no cross product anywhere.
 
-    Skew: a fingerprint shared by m docs yields C(m, 2) pair rows —
-    boilerplate phrases are the hot keys. ``max_df`` drops
-    fingerprints with document frequency > max_df from pair
-    generation (scale probe: flattens the curve at 16x corpus);
-    shared counts then UNDER-count for pairs relying on dropped
-    fingerprints. None keeps exact scoring."""
+    Skew: boilerplate phrases are the hot fingerprints.  ``max_df`` is
+    the counter's document-frequency guard (scale probe: flattens the
+    curve at 16x corpus); shared counts then UNDER-count for pairs
+    relying on dropped fingerprints. None keeps exact scoring."""
     from .textquality import gram_hashes, winnow_fingerprint_arrow
 
     from ..session import cached_exprs
@@ -1166,33 +1078,10 @@ def winnow_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
                                               mirrorable=mirrorable))
     fps_col = cached_exprs(("winnow_fp", w),
                            lambda: winnow_fingerprint_arrow(F.col("hs"), w))
-    hashed = df.select(F.col(id_col).alias("id"), hs_col.alias("hs"))
-    # the fingerprint table feeds FOUR branches (both sides of the
-    # self-join + two size joins); without persist the whole
-    # hash+winnow pipeline recomputes per branch (no DAG CSE — the
-    # minhash shingle-table lesson; measured ~4x on the scale probe)
-    fp = (hashed.select("id", fps_col.alias("fps"))
-          .withColumn("n_fp", F.size("fps")).filter(F.col("n_fp") > 0)
-          .persist())
-    sizes = fp.select("id", "n_fp")
-    tok = fp.select("id", F.explode("fps").alias("f"))
-    if max_df is not None:
-        freq = tok.groupBy("f").agg(F.count(F.lit(1)).alias("fdf"))
-        tok = tok.join(freq.filter(F.col("fdf") <= max_df), "f", "leftsemi")
-    shared = (tok.alias("a")
-              .join(tok.alias("b"),
-                    (F.col("a.f") == F.col("b.f"))
-                    & (F.col("a.id") < F.col("b.id")))
-              .groupBy(F.col("a.id").alias("id1"),
-                       F.col("b.id").alias("id2"))
-              .agg(F.count(F.lit(1)).alias("shared")))
-    res = (shared
-           .join(sizes.select(F.col("id").alias("id1"),
-                              F.col("n_fp").alias("n1")), "id1")
-           .join(sizes.select(F.col("id").alias("id2"),
-                              F.col("n_fp").alias("n2")), "id2")
-           .withColumn("overlap",
-                       F.col("shared").cast("double")
-                       / F.least(F.col("n1"), F.col("n2"))))
+    sets = (df.select(F.col(id_col).alias("id"), hs_col.alias("hs"))
+            .select("id", fps_col.alias("sh")))
+    res = _shared_token_counts(sets, max_df).withColumn(
+        "overlap",
+        F.col("inter").cast("double") / F.least(F.col("sz1"), F.col("sz2")))
     return (res.filter(F.col("overlap") >= threshold)
             .select("id1", "id2", F.round("overlap", 6).alias("overlap")))

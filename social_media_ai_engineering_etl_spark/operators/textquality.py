@@ -416,16 +416,6 @@ def cms_sketch(df, text_col: str, depth: int = 5,
             .groupBy("row", "bucket").agg(F.count(F.lit(1)).alias("cnt")))
 
 
-def cms_merge(*sketches: "DataFrame") -> "DataFrame":
-    """Union counter tables built with the same (depth,width,seed)
-    and re-sum per cell — the mergeability that makes the sketch a
-    corpus-rollup primitive."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate(sketch: "DataFrame", items: "DataFrame",
                  item_col: str = "token", depth: int = 5,
                  width: int = 8192, seed: int = 42,

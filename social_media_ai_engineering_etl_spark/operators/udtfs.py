@@ -6,8 +6,8 @@ The engine's hot paths stay native (explode compositions,
 applyInPandas) — a Python UDTF is row-at-a-time across the Python
 worker boundary, so it is the right tool only where SQL callers need
 the operator *from SQL* or where per-row streaming state doesn't fit
-the grouped-map shape. Both UDTFs here are equivalence-pinned against
-their native twins in tests/test_curation.py.
+the grouped-map shape. The UDTF here is equivalence-pinned against
+its native twin in tests/test_curation.py.
 """
 
 from __future__ import annotations
@@ -46,86 +46,3 @@ class NextFitPackUDTF:
             self.bin += 1
             self.fill = t
         yield row["lang"], row["shard"], row["doc_id"], self.bin, t
-
-
-@udtf(returnType=("user_id bigint, k bigint, valid_from timestamp, "
-                  "valid_to timestamp, is_current int"))
-class Scd2IntervalsUDTF:
-    """SCD2 validity intervals as a SQL table function: per user (in
-    event-time order) emit one row per *change* of the tracked
-    attribute, with [valid_from, valid_to) and an is_current marker —
-    the classic slowly-changing-dimension type-2 build. The native
-    twin (two window functions) is qx_scd2_intervals; this is the SQL
-    surface for callers who want it lateral.
-
-    NULL semantics match the native twin's ``prev_k IS NULL OR
-    k <> prev_k`` filter under SQL three-valued logic (r2 ADVICE —
-    Python ``!=`` diverged on NULLs): a row is a change point when its
-    IMMEDIATE predecessor's k is NULL (including the first row per
-    user) or when both ks are non-NULL and differ; a non-NULL -> NULL
-    transition is never a change.  The open interval's value is
-    therefore tracked separately from the previous row's k."""
-
-    def __init__(self):
-        self.user = None
-        self.cur_k = None      # value of the open interval
-        self.since = None      # valid_from of the open interval
-        self.prev_k = None     # IMMEDIATE predecessor row's k
-        self.started = False
-
-    def eval(self, row):
-        k = row["k"]
-        if not self.started:
-            self.started = True
-            self.user, self.cur_k, self.since = row["user_id"], k, row["ts"]
-        elif self.prev_k is None or (k is not None and self.prev_k is not None
-                                     and k != self.prev_k):
-            yield self.user, self.cur_k, self.since, row["ts"], 0
-            self.cur_k, self.since = k, row["ts"]
-        self.prev_k = k
-
-    def terminate(self):
-        if self.started:
-            yield self.user, self.cur_k, self.since, None, 1
-
-
-class FixedArityCsvSplitUDTF:
-    """Polymorphic UDTF (no static returnType): ``analyze()`` computes
-    the output schema FROM THE CALL — ``csv_split(line, 3)`` yields
-    columns c0..c2.  This is the raw-ingest shape: a delimited line of
-    DECLARED arity becomes typed columns at plan time, so downstream
-    operators see a fixed schema (the 100 TB contract: schema is a
-    compile-time fact, not a per-row discovery), and a row with the
-    wrong field count fails loudly instead of shifting values.
-
-    Registered per session::
-
-        from pyspark.sql.functions import udtf
-        spark.udtf.register("csv_split", udtf(FixedArityCsvSplitUDTF))
-
-        SELECT s.* FROM lines, LATERAL csv_split(line, 3) s
-    """
-
-    @staticmethod
-    def analyze(line, n):
-        from pyspark.sql.functions import AnalyzeResult
-        from pyspark.sql.types import StringType, StructType
-        if not n.isConstantExpression or n.value is None:
-            raise ValueError("csv_split arity must be a constant literal")
-        width = int(n.value)
-        if not 1 <= width <= 1024:
-            raise ValueError(f"csv_split arity out of range: {width}")
-        schema = StructType()
-        for i in range(width):
-            schema = schema.add(f"c{i}", StringType())
-        return AnalyzeResult(schema=schema)
-
-    def eval(self, line, n: int):
-        if line is None:
-            return
-        parts = line.split(",")
-        if len(parts) != n:
-            raise ValueError(
-                f"csv_split: expected {n} fields, got {len(parts)}: "
-                f"{line[:80]!r}")
-        yield tuple(parts)

@@ -50,9 +50,7 @@ def qx_scd2_intervals(spark, sf_dir):
     interval with the next change's timestamp (lead), NULL-open for
     the current value. Two window passes over the SAME (user_id ->
     ts) sort order — Catalyst plans one Sort + one Exchange, the
-    second Window reuses the partitioning. The lateral-SQL twin is
-    operators/udtfs.py::Scd2IntervalsUDTF (equivalence-pinned in
-    tests/test_curation.py)."""
+    second Window reuses the partitioning."""
     from pyspark.sql import Window
     k = _events(spark, sf_dir).select(
         "user_id", "ts", "event_id",

@@ -264,30 +264,6 @@ def test_pack_udtf_matches_grouped_map_path(spark, sf_dir):
     assert got == want
 
 
-def test_scd2_udtf_matches_window_path(spark, sf_dir):
-    from social_media_ai_engineering_etl_spark.operators.udtfs import (
-        Scd2IntervalsUDTF)
-    from social_media_ai_engineering_etl_spark.queries.warehouse_patterns import (
-        qx_scd2_intervals)
-    spark.udtf.register("scd2_intervals", Scd2IntervalsUDTF)
-    import os
-    (spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-     .select("user_id", "ts", "event_id",
-             F.from_json("props", "k BIGINT").getField("k").alias("k"))
-     .createOrReplaceTempView("__scd2_input"))
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    got = sorted(map(tuple, spark.sql("""
-        SELECT * FROM scd2_intervals(
-            TABLE(__scd2_input)
-            PARTITION BY user_id ORDER BY (ts, event_id))
-    """).select("user_id", "k",
-                F.date_format("valid_from", fmt).alias("valid_from"),
-                F.date_format("valid_to", fmt).alias("valid_to"),
-                "is_current").collect()))
-    want = sorted(map(tuple, qx_scd2_intervals(spark, sf_dir).collect()))
-    assert got == want
-
-
 # ---------------------------------------------------------------------------
 # substring duplication profile
 # ---------------------------------------------------------------------------
@@ -313,53 +289,6 @@ def test_substring_dup_profile_planted_span(spark):
     # doc lengths: 18 -> 9 grams; 15 -> 6 grams; 15 -> 6 grams
     assert out[1]["n_grams"] == 9
     assert out[2]["n_grams"] == 6
-
-
-def test_scd2_udtf_null_transitions_match_sql_semantics(spark):
-    """r2 ADVICE: the UDTF must replay the native twin's
-    ``prev_k IS NULL OR k <> prev_k`` three-valued-logic filter on a
-    fixture that actually contains NULL ks (the parquet fixture never
-    has them): NULL-first, A->NULL->A, A->NULL->B, trailing NULL."""
-    import datetime
-
-    from pyspark.sql import Window
-
-    from social_media_ai_engineering_etl_spark.operators.udtfs import (
-        Scd2IntervalsUDTF)
-
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = []
-    seqs = {1: [None, 7, 7, None, 7], 2: [1, None, 2, 2],
-            3: [5, None, None, 5], 4: [None], 5: [3, 3, None]}
-    for uid, ks in seqs.items():
-        for i, k in enumerate(ks):
-            rows.append((uid, t0 + datetime.timedelta(minutes=i), i, k))
-    df = spark.createDataFrame(
-        rows, "user_id bigint, ts timestamp, event_id bigint, k bigint")
-    df.createOrReplaceTempView("__scd2_nulls")
-
-    def key(t):
-        return tuple((v is None, v) for v in t)
-
-    spark.udtf.register("scd2_intervals_nulls", Scd2IntervalsUDTF)
-    got = sorted(map(tuple, spark.sql("""
-        SELECT * FROM scd2_intervals_nulls(
-            TABLE(__scd2_nulls)
-            PARTITION BY user_id ORDER BY (ts, event_id))
-    """).collect()), key=key)
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    changes = (df.withColumn("prev_k", F.lag("k").over(w))
-               .filter(F.col("prev_k").isNull()
-                       | (F.col("k") != F.col("prev_k"))))
-    want = sorted(map(tuple, changes.select(
-        "user_id", "k", F.col("ts").alias("valid_from"),
-        F.lead("ts").over(w).alias("valid_to"))
-        .withColumn("is_current",
-                    F.when(F.col("valid_to").isNull(), 1).otherwise(0))
-        .collect()), key=key)
-    assert got == want
-
 
 
 def test_lm_familiarity_separates_natural_from_garbled(spark):

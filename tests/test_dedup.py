@@ -77,8 +77,8 @@ def test_minhash_candidates_bounded(docs):
 def test_cms_error_bound_and_merge(docs):
     """CMS contract: estimate >= true always (counters only
     over-count); estimate <= true + (e/width)*N on every probed item
-    (depth=5 rows make a violation p < e^-5 per item); and merging
-    two half-corpus sketches equals sketching the union."""
+    (depth=5 rows make a violation p < e^-5 per item); an absent
+    item estimates 0."""
     import math
     from social_media_ai_engineering_etl_spark.operators import textquality as tq
     exact = {r.token: r.cnt
@@ -95,14 +95,6 @@ def test_cms_error_bound_and_merge(docs):
     for tok, true_cnt in exact.items():
         assert est[tok] >= true_cnt, f"CMS under-counted {tok!r}"
         assert est[tok] <= true_cnt + bound, f"CMS blew the bound on {tok!r}"
-    # mergeability: two half sketches re-summed == whole-corpus sketch
-    half_a = docs.filter(F.col("doc_id") % 2 == 0)
-    half_b = docs.filter(F.col("doc_id") % 2 == 1)
-    merged = tq.cms_merge(tq.cms_sketch(half_a, "text"),
-                          tq.cms_sketch(half_b, "text"))
-    est_m = {r.token: r.est_cnt
-             for r in tq.cms_estimate(merged, hitters, "token").collect()}
-    assert est_m == est
     # an item the corpus never contained must estimate 0 whenever ANY
     # of its cells is empty (probe rows survive the join, not just
     # occupied cells) — with 20k cells and ~5k distinct tokens, an
@@ -381,6 +373,31 @@ def test_prefix_join_equals_inverted_index(spark, sf_dir):
              for r in dedup.ngram_jaccard_pairs_prefix(
                  docs, "doc_id", "text", threshold=t).collect()}
         assert a == b, t
+        spark.catalog.clearCache()
+
+
+def test_max_df_guard_on_shared_pair_counter(spark):
+    """``max_df`` on both callers of the shared inverted-index pair
+    counter (n-gram Jaccard, winnowing): a cap at or above the row
+    count drops nothing, and a cap of 1 drops every shared token —
+    each one has document frequency >= 2 — so no pair survives."""
+    rows = [
+        (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+        (2, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+        (3, "alpha beta gamma delta epsilon zeta mu nu xi omicron"),
+        (4, "pi rho sigma tau upsilon phi chi psi omega one"),
+        (5, "pi rho sigma tau upsilon phi chi psi omega two"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for fn in (dedup.ngram_jaccard_pairs_inverted, dedup.winnow_dedup_pairs):
+        def run(**kw):
+            return sorted(map(tuple, fn(df, "doc_id", "text",
+                                        threshold=0.1, **kw).collect()))
+        exact = run()
+        assert exact, fn.__name__
+        for cap in (len(rows), 2 * len(rows)):
+            assert run(max_df=cap) == exact, (fn.__name__, cap)
+        assert run(max_df=1) == [], fn.__name__
         spark.catalog.clearCache()
 
 

@@ -92,27 +92,3 @@ def test_sql_udf_matches_native_expression(spark, sf_dir):
         "o_orderkey", F.col("engagement_ratio").alias("r"))
     assert via_udf.exceptAll(native).isEmpty()
     assert native.exceptAll(via_udf).isEmpty()
-
-
-def test_polymorphic_udtf_analyze_schema(spark):
-    """FixedArityCsvSplitUDTF: output schema is computed at plan time
-    from the literal arity argument; wrong-arity rows fail loudly."""
-    import pytest
-    from pyspark.sql.functions import udtf as _udtf
-
-    from social_media_ai_engineering_etl_spark.operators.udtfs import (
-        FixedArityCsvSplitUDTF)
-    spark.udtf.register("csv_split", _udtf(FixedArityCsvSplitUDTF))
-    out = spark.sql("""
-        SELECT s.* FROM (SELECT 'a,b,c' AS line UNION ALL
-                         SELECT 'd,e,f' AS line) t,
-        LATERAL csv_split(line, 3) s""")
-    assert out.columns == ["c0", "c1", "c2"]
-    assert sorted(map(tuple, out.collect())) == [("a", "b", "c"),
-                                                 ("d", "e", "f")]
-    two = spark.sql(
-        "SELECT s.* FROM (SELECT 'x,y' AS line) t, LATERAL csv_split(line, 2) s")
-    assert two.columns == ["c0", "c1"]
-    with pytest.raises(Exception, match="expected 3 fields"):
-        spark.sql("SELECT s.* FROM (SELECT 'only,two' AS line) t, "
-                  "LATERAL csv_split(line, 3) s").collect()

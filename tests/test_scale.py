@@ -448,216 +448,69 @@ def test_ri_audit_null_count_scheme_survives_dirty_parents(spark, tmp_path):
     assert rows["supplier.s_nationkey->nation"] == (1, 0)
 
 
-def test_sharded_author_topk_equals_plain(spark, sf_dir):
-    """r5 hot-author knob: author_texts/author_uncommon_words with
-    shards=k must return EXACTLY the plain window's rows (two-phase
-    top-k is lossless: every global top-N row is in its shard's
-    top-N)."""
-    import os as _os
-
-    from social_media_ai_engineering_etl_spark.operators import phrases
-    docs = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
-    plain = sorted(map(tuple, phrases.author_uncommon_words(
-        docs, "source", "text", "doc_id").collect()))
-    sharded = sorted(map(tuple, phrases.author_uncommon_words(
-        docs, "source", "text", "doc_id", shards=8).collect()))
-    assert plain == sharded
-    a = sorted(map(tuple, phrases.author_texts(
-        docs, "source", "text", "doc_id", max_posts=7)
-        .select("doc_id", "__rn").collect()))
-    b = sorted(map(tuple, phrases.author_texts(
-        docs, "source", "text", "doc_id", max_posts=7, shards=8)
-        .select("doc_id", "__rn").collect()))
-    assert a == b
-
-
 def test_minhash_max_bucket_guard_caps_hot_cluster(spark):
-    """r5 hot-bucket knob: a 40-doc near-identical cluster pairs fully
+    """r5 hot-bucket knob: a near-identical cluster pairs fully
     without the guard; with max_bucket below the cluster width the
     pathological bucket is dropped from pair generation while pairs
-    in ordinary buckets survive."""
+    in ordinary buckets survive.  On a corpus whose buckets are all
+    narrower than max_bucket the in-plan width filter is vacuous, so
+    the guarded pair set equals the unguarded one."""
     from social_media_ai_engineering_etl_spark.operators import dedup
+
+    def pairs(df, **kw):
+        return {(r.id1, r.id2)
+                for r in dedup.minhash_dedup_pairs(
+                    df, "doc_id", "text", threshold=0.5, **kw).collect()}
+
     template = " ".join(f"tok{i}" for i in range(60))
-    rows = ([(i, f"{template} variant {i}") for i in range(40)]
-            + [(100, "a completely different document about spark joins "
-                     "and shuffle behavior under load today"),
-               (101, "a completely different document about spark joins "
-                     "and shuffle behavior under load tomorrow")])
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    full = dedup.minhash_dedup_pairs(df, "doc_id", "text",
-                                     threshold=0.5).collect()
-    full_pairs = {(r.id1, r.id2) for r in full}
+
+    def hot_cluster(width, other):
+        rows = ([(i, f"{template} variant {i}") for i in range(width)]
+                + [(other, "a completely different document about spark "
+                           "joins and shuffle behavior under load today"),
+                   (other + 1, "a completely different document about "
+                               "spark joins and shuffle behavior under "
+                               "load tomorrow")])
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    df = hot_cluster(40, 100)
+    full_pairs = pairs(df)
     assert (100, 101) in full_pairs
     assert sum(1 for a, b in full_pairs if a < 40 and b < 40) \
         == 40 * 39 // 2, "cluster pairs fully without the guard"
-    capped = dedup.minhash_dedup_pairs(df, "doc_id", "text",
-                                       threshold=0.5,
-                                       max_bucket=8).collect()
-    capped_pairs = {(r.id1, r.id2) for r in capped}
+    capped_pairs = pairs(df, max_bucket=8)
     assert (100, 101) in capped_pairs, \
         "ordinary-bucket pairs survive the cap"
     assert not any(a < 40 and b < 40 for a, b in capped_pairs), \
         "the pathological cluster's buckets are dropped in every band"
 
+    # a wider cluster under a larger cap: same algebra as the
+    # production LSH_GUARD_CROSSOVER, at a fixture-sized width
+    capped_pairs = pairs(hot_cluster(300, 1000), max_bucket=64)
+    assert (1000, 1001) in capped_pairs
+    assert not any(a < 300 and b < 300 for a, b in capped_pairs)
 
-def test_lsh_guard_auto_selects_from_measured_profile(spark):
-    """r8 structural guard: the in-plan width filter must equal the
-    old measure->decide semantics in BOTH regimes — on the hot-cluster
-    shape it equals the hand-set knob (buckets wider than the
-    crossover dropped), on the uniform corpus it equals the PLAIN
-    path (the filter is vacuous below the crossover).  Policy +
-    crossover recorded in the result schema metadata; no profile
-    action runs."""
-    from social_media_ai_engineering_etl_spark.operators import dedup
-
-    template = " ".join(f"tok{i}" for i in range(60))
-    hot_rows = ([(i, f"{template} variant {i}") for i in range(300)]
-                + [(1000, "a completely different document about spark "
-                          "joins and shuffle behavior under load today"),
-                   (1001, "a completely different document about spark "
-                          "joins and shuffle behavior under load tomorrow")])
-    hot = spark.createDataFrame(hot_rows, "doc_id long, text string")
-    # crossover lowered to keep the fixture small; the guard algebra
-    # is identical at the production value of 256
-    auto = dedup.minhash_dedup_pairs_auto(hot, "doc_id", "text",
-                                          threshold=0.5, crossover=64)
-    meta = auto.schema["id1"].metadata["lsh_guard"]
-    assert meta["max_bucket"] == 64, meta
-    assert meta["policy"] == "structural-width-filter", meta
-    got = {(r.id1, r.id2) for r in auto.collect()}
-    want = {(r.id1, r.id2)
-            for r in dedup.minhash_dedup_pairs(
-                hot, "doc_id", "text", threshold=0.5,
-                max_bucket=64).collect()}
-    assert got == want, "structural guard must equal the hand-set guard"
-    assert (1000, 1001) in got
-
-    uni_rows = [(i, f"doc {i} " + " ".join(
-        f"u{i}w{j}" for j in range(25))) for i in range(80)]
-    uni = spark.createDataFrame(uni_rows, "doc_id long, text string")
-    auto_u = dedup.minhash_dedup_pairs_auto(uni, "doc_id", "text",
-                                            threshold=0.5, crossover=64)
-    meta_u = auto_u.schema["id1"].metadata["lsh_guard"]
-    assert meta_u["max_bucket"] == 64, meta_u   # always stamped; vacuous here
-    got_u = {(r.id1, r.id2) for r in auto_u.collect()}
-    want_u = {(r.id1, r.id2)
-              for r in dedup.minhash_dedup_pairs(
-                  uni, "doc_id", "text", threshold=0.5).collect()}
-    assert got_u == want_u, \
-        "below the crossover the width filter must be vacuous"
+    uni = spark.createDataFrame(
+        [(i, f"doc {i} " + " ".join(f"u{i}w{j}" for j in range(25)))
+         for i in range(80)], "doc_id long, text string")
+    assert pairs(uni, max_bucket=64) == pairs(uni), \
+        "below max_bucket the width filter must be vacuous"
 
 
-def test_author_shards_auto_policy_and_equivalence(spark):
-    """Window flavor of diagnose-then-enable: the measured profile
-    drives the shard knob; the uniform corpus keeps the plain window;
-    a forced-low crossover enables sharding and the rowset is
-    IDENTICAL (lossless two-phase top-k)."""
-    from social_media_ai_engineering_etl_spark.operators import phrases
-
-    rows = [(f"a{i % 7}", f"text {'x' * (i % 40)} {i}", i)
-            for i in range(200)]
-    df = spark.createDataFrame(rows, "author string, text string, id long")
-    plain = {(r.author, r.id)
-             for r in phrases.author_texts(
-                 df, "author", "text", "id", max_posts=5).collect()}
-
-    auto = phrases.author_texts_auto(df, "author", "text", "id",
-                                     max_posts=5)
-    meta = auto.schema["author"].metadata["window_shards"]
-    assert meta["shards"] == -1, meta          # below crossover -> off
-    assert {(r.author, r.id) for r in auto.collect()} == plain
-
-    forced = phrases.author_texts_auto(df, "author", "text", "id",
-                                       max_posts=5, crossover=10)
-    meta_f = forced.schema["author"].metadata["window_shards"]
-    assert meta_f["shards"] == 32, meta_f      # hottest key ~29 > 10
-    assert {(r.author, r.id) for r in forced.collect()} == plain
-
-    # pure policy at the production crossover
-    on = phrases.choose_window_shards({"top_key_rows": 10**9,
-                                       "n_keys": 5})
-    off = phrases.choose_window_shards({"top_key_rows": 10**6,
-                                        "n_keys": 5})
-    assert on["shards"] == 32 and off["shards"] is None
-
-
-def test_bounded_key_profile_zero_job_decision(spark, sf_dir):
-    """r8: the total-row-count bound (parquet footer, re-read per
-    invocation — no cross-run memo anywhere) proves the shard guard
-    OFF with zero Spark jobs, and the resulting rows equal the plain
-    path; a bound ABOVE the crossover must fall back to the measured
-    profile (the bound can only prove the off direction)."""
+def test_qx_dedup_minhash_equals_unguarded_pairs(spark, sf_dir):
+    """The benched qx_dedup_minhash runs the hot-bucket guard at
+    LSH_GUARD_CROSSOVER; on the uniform testdata corpus no bucket is
+    that wide, so its rows must equal the unguarded
+    minhash_dedup_pairs rows."""
     import os
 
-    from social_media_ai_engineering_etl_spark.operators import phrases
-    from social_media_ai_engineering_etl_spark.session import \
-        parquet_num_rows
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    n = parquet_num_rows(path)
-    assert n is not None and n > 0
-    # the footer count matches the engine's own count
-    assert n == spark.read.parquet(path).count()
-
-    df = spark.createDataFrame(
-        [(f"a{i % 7}", f"text {'x' * (i % 40)} {i}", i)
-         for i in range(200)], "author string, text string, id long")
-    plain = {(r.author, r.id)
-             for r in phrases.author_texts(
-                 df, "author", "text", "id", max_posts=5).collect()}
-    auto = phrases.author_texts_auto(df, "author", "text", "id",
-                                     max_posts=5, total_rows_bound=200)
-    meta = auto.schema["author"].metadata["window_shards"]
-    assert meta["shards"] == -1, meta
-    assert "total-row bound" in meta["reason"], meta
-    assert {(r.author, r.id) for r in auto.collect()} == plain
-
-    # bound above the crossover: falls back to the measured profile
-    forced = phrases.author_texts_auto(df, "author", "text", "id",
-                                       max_posts=5, crossover=10,
-                                       total_rows_bound=200)
-    meta_f = forced.schema["author"].metadata["window_shards"]
-    assert meta_f["shards"] == 32, meta_f      # hottest key ~29 > 10
-    assert "total-row bound" not in meta_f["reason"], meta_f
-    assert {(r.author, r.id) for r in forced.collect()} == plain
-
-    # pure policy: the bound profile refuses the on-direction
-    import pytest
-    with pytest.raises(AssertionError):
-        phrases.choose_window_shards(
-            phrases.bounded_key_profile(10**9), crossover=100)
-
-
-def test_graded_paths_route_through_auto_guards(spark, sf_dir):
-    """VERDICT r6 ask #3: the GRADED/benched registrations themselves
-    must run the measure->decide machinery — qx_dedup_minhash rides
-    minhash_dedup_pairs_auto and q17_author_words rides
-    author_uncommon_words_auto.  On the uniform testdata corpus both
-    guards must choose OFF (evidence in the schema metadata) and the
-    rows must equal the plain paths."""
     import social_media_ai_engineering_etl_spark.queries  # noqa: F401
-    from social_media_ai_engineering_etl_spark.operators import (dedup,
-                                                                 phrases)
+    from social_media_ai_engineering_etl_spark.operators import dedup
     from social_media_ai_engineering_etl_spark.registry import QUERIES
 
     mh = QUERIES["qx_dedup_minhash"](spark, sf_dir)
-    meta = mh.schema["id1"].metadata["lsh_guard"]
-    # r8: the guard is structural (in-plan width filter, vacuous on
-    # this uniform corpus) — the crossover is always stamped
-    assert meta["max_bucket"] == meta["crossover"] > 0, meta
-    assert meta["policy"] == "structural-width-filter", meta
-    import os
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     plain = dedup.minhash_dedup_pairs(docs, "doc_id", "text",
                                       threshold=0.5)
     assert ({(r.id1, r.id2, r.jaccard_sim) for r in mh.collect()}
             == {(r.id1, r.id2, r.jaccard_sim) for r in plain.collect()})
-
-    aw = QUERIES["q17_author_words"](spark, sf_dir)
-    wmeta = aw.schema["source"].metadata["window_shards"]
-    assert wmeta["shards"] == -1, wmeta            # plain window kept
-    assert wmeta["top_key_rows"] <= wmeta["crossover"]
-    plain_w = phrases.author_uncommon_words(docs, "source", "text",
-                                            "doc_id")
-    assert ({(r.source, r.word, r.freq) for r in aw.collect()}
-            == {(r.source, r.word, r.freq) for r in plain_w.collect()})
