@@ -3,10 +3,11 @@
 Defaults target local[$SPARK_GRAFT_CPUS] for tests/bench, but every
 setting is chosen for a multi-executor cluster at ~100 TB:
 
-- AQE on (runtime coalescing, skew-join splitting, plan re-opt),
-- shuffle partitions sized to cores locally (on a real cluster AQE
-  coalesces from a high initial number, so we set a high initial and
-  let AQE shrink),
+- AQE on (skew-join splitting, plan re-opt, and coalescing of shuffle
+  partitions from max(cores, 32), persisted subtrees included; it never
+  coalesces an explicit ``repartition(n)``),
+- ``spark.default.parallelism`` unset: n under local[n], executor cores
+  on a cluster -- the session's cores are its one compute fan-out,
 - Arrow enabled for every pandas UDF boundary,
 - UTC session timezone so results compare bit-for-bit with the
   DuckDB oracle (DuckDB timestamps are UTC-naive),
@@ -74,9 +75,11 @@ def get_spark(app_name: str = "social-media-ai-engineering-etl-spark",
         # irrelevant-but-harmless on a cluster where stages run long
         # enough to amortize compiles.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
-        # initial shuffle parallelism; AQE coalesces down at runtime.
+        # AQE's initial shuffle partition count; the next conf (off by
+        # default) lets AQE coalesce it inside persisted subtrees too.
         .config("spark.sql.shuffle.partitions", str(max(n, 32)))
-        .config("spark.default.parallelism", str(max(n, 32)))
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         # --- oracle parity -------------------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         # events.parquet has carried TIMESTAMP(NANOS) in some driver
@@ -157,7 +160,7 @@ def load_events_cached(spark: SparkSession, path: str):
     return df
 
 
-def widen_scan(df, path: str | None = None):
+def widen_scan(df, path: str):
     """Size-adaptive compute repartition for CPU-heavy stages.
 
     The synthetic test tables are single-row-group parquet files, so a
@@ -167,24 +170,20 @@ def widen_scan(df, path: str | None = None):
     into thousands of partitions and a blanket ``repartition`` would
     be a catastrophic full shuffle — so this estimates the scan split
     count from file size / maxPartitionBytes (pure metadata, no
-    planning round-trip) and only repartitions when the scan comes
-    back narrower than the cluster's parallelism. Filters and column
-    pruning still reach the parquet scan: Catalyst pushes both
-    through RepartitionOperation nodes, so the exchange carries only
-    the pruned/filtered rows.
+    planning round-trip) and only repartitions, to the session's cores
+    (an explicit count AQE never coalesces), if that is wider. Filters
+    and column pruning still reach the parquet scan: Catalyst pushes
+    both through RepartitionOperation nodes, so the exchange carries
+    only the pruned/filtered rows.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    if path is not None:
-        max_split = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-        size = _scan_bytes(path)
-        if size is None:          # remote/unknown: assume already wide
-            return df
-        est_splits = max(1, size // max_split)
-    else:
-        est_splits = df.rdd.getNumPartitions()
-    if est_splits < target:
+    size = _scan_bytes(path)
+    if size is None:              # remote/unknown: assume already wide
+        return df
+    max_split = _parse_bytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    if max(1, size // max_split) < target:
         return df.repartition(target)
     return df
 

@@ -514,3 +514,44 @@ def test_qx_dedup_minhash_equals_unguarded_pairs(spark, sf_dir):
                                       threshold=0.5)
     assert ({(r.id1, r.id2, r.jaccard_sim) for r in mh.collect()}
             == {(r.id1, r.id2, r.jaccard_sim) for r in plain.collect()})
+
+
+def test_compute_fanout_follows_cores(spark, sf_dir):
+    """The session's cores are its one compute fan-out: the default
+    parallelism is the core count, widen_scan widens a one-split scan
+    to exactly that many partitions, and AQE coalesces the shuffles
+    inside persisted subtrees (canChangeCachedPlanOutputPartitioning),
+    so the minhash query's cached plans carry AQEShuffleRead nodes."""
+    import social_media_ai_engineering_etl_spark.queries  # noqa: F401
+    from social_media_ai_engineering_etl_spark.registry import QUERIES
+    from social_media_ai_engineering_etl_spark.session import (cache_scope,
+                                                               cpus,
+                                                               widen_scan)
+
+    assert spark.sparkContext.defaultParallelism == cpus()
+    path = os.path.join(sf_dir, "documents.parquet")
+    assert widen_scan(spark.read.parquet(path),
+                      path).rdd.getNumPartitions() == cpus()
+
+    with cache_scope(spark):
+        df = QUERIES["qx_dedup_minhash"](spark, sf_dir)
+        df.collect()
+        cached_plans, cached_reads = 0, 0
+        todo = [(df._jdf.queryExecution().executedPlan(), False)]
+        while todo:
+            node, in_cache = todo.pop()
+            cls = node.getClass().getSimpleName()
+            if cls == "AdaptiveSparkPlanExec":
+                todo.append((node.executedPlan(), in_cache))
+                continue
+            if cls.endswith("QueryStageExec"):
+                todo.append((node.plan(), in_cache))
+                continue
+            cached_reads += in_cache and cls == "AQEShuffleReadExec"
+            if cls == "InMemoryTableScanExec":
+                cached_plans += 1
+                todo.append((node.relation().cachedPlan(), True))
+            kids = node.children()
+            todo.extend((kids.apply(i), in_cache) for i in range(kids.size()))
+    assert cached_plans, "qx_dedup_minhash plan has no persisted subtree"
+    assert cached_reads, "AQE coalesced no shuffle inside a persisted subtree"
